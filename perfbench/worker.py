@@ -13,6 +13,7 @@ Usage (normally only via run.py):
 
 from __future__ import annotations
 
+import importlib
 import json
 import os
 import sys
@@ -130,8 +131,6 @@ def main() -> int:
     with open(cfg_path) as fh:
         cfg = json.load(fh)
     run = Run(cfg)
-    import importlib
-
     module = importlib.import_module(run.workload)
     try:
         result = module.run(run)
