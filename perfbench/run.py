@@ -36,7 +36,7 @@ ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
 WORKLOADS = ("query_mix", "lake_ticks")
-WORKER_TIMEOUT_S = 170
+WORKER_TIMEOUT_S = 150  # with set-up and clean-up, a run ends within 180 s
 
 
 def _group_alive(pgid: int) -> bool:
