@@ -41,12 +41,6 @@ LANG_P = (0.41, 0.15, 0.15, 0.15, 0.14)
 EMBED_DIM = 64
 N_LABELS = 10
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-
 def table_sizes(sf: float) -> dict[str, int]:
     """Row count per table at scale factor ``sf``."""
     n = lambda base, floor=1: max(floor, int(round(base * sf)))  # noqa: E731
@@ -88,14 +82,14 @@ def _texts(rng, n: int) -> list[str]:
     return texts
 
 
-def events(rng, n: int, n_users: int, id0: int = 0) -> pa.Table:
-    """``n`` click-stream events over 30 days, ids from ``id0``."""
+def events(rng, n: int, n_users: int) -> pa.Table:
+    """``n`` click-stream events over 30 days."""
     span_us = 30 * 86_400 * 1_000_000
     ts = np.sort(rng.integers(0, span_us, n)) + np.datetime64(
         "2024-01-01T00:00:00", "us"
     ).astype(np.int64)
     return pa.table({
-        "event_id": pa.array(np.arange(id0, id0 + n), pa.int64()),
+        "event_id": pa.array(np.arange(n), pa.int64()),
         "ts": pa.array(ts.astype("datetime64[us]")),
         "user_id": pa.array(rng.integers(0, n_users, n), pa.int64()),
         "event_type": np.array(EVENT_TYPES)[rng.integers(0, 5, n)],
@@ -104,14 +98,14 @@ def events(rng, n: int, n_users: int, id0: int = 0) -> pa.Table:
     })
 
 
-def documents(rng, n: int, id0: int = 0) -> pa.Table:
-    """``n`` crawl documents, ids from ``id0``."""
+def documents(rng, n: int) -> pa.Table:
+    """``n`` crawl-style documents (5% near-duplicates)."""
     texts = _texts(rng, n)
     return pa.table({
-        "doc_id": pa.array(np.arange(id0, id0 + n), pa.int64()),
+        "doc_id": pa.array(np.arange(n), pa.int64()),
         "text": texts,
         "lang": np.array(LANGS)[rng.choice(5, n, p=LANG_P)],
-        "source": [f"src{i % 20}" for i in range(id0, id0 + n)],
+        "source": [f"src{i % 20}" for i in range(n)],
         "n_chars": pa.array([len(t) for t in texts], pa.int64()),
     })
 
