@@ -126,7 +126,7 @@ def run_worker(workload: str, seed: int, seconds: int, trace: bool,
 
 
 def report(result: dict, trace: bool, bench: dict) -> dict:
-    """The driver-facing JSON line from a worker result."""
+    """The JSON result line for a worker result."""
     metrics = {}
     if trace:
         for m in bench["per_layer"]:
