@@ -17,7 +17,10 @@ failed operation.
 In a traced run the ticks alternate (A B B A) between ``run_cycle`` and
 an instrumented tick that calls ``stream_ingest_all``,
 ``run_expectations`` and ``query_reduce`` directly, timing each and
-reading the streaming progress of the ingest queries.
+reading the streaming progress of the ingest queries; event-log
+figures come from the plain ticks only.  After the ticks, the traced
+run also runs the daily crawl-tick sequence of ``crawl_days.py`` for
+its txlog, compaction and vacuum layers.
 """
 
 from __future__ import annotations
@@ -28,6 +31,7 @@ import sys
 import time
 from datetime import datetime, timedelta
 
+import crawl_days
 import stats
 from worker import abba, du
 
@@ -123,7 +127,9 @@ def run(run) -> dict:
             continue
         t1 = time.time()
         walls.append((instrument, t1 - t0))
-        steps.append({"t0": t0, "t1": t1, "gc_s": run.gc_seconds() - g0})
+        if tick and not instrument:  # event-log figures: plain ticks only
+            steps.append({"t0": t0, "t1": t1,
+                          "gc_s": run.gc_seconds() - g0})
         ready = results_ready(os.path.join(root, "results"))
         if not (ready and checks and all(checks.values())):
             print(f"# lake_ticks failure: tick {tick}: checks={checks} "
@@ -140,7 +146,7 @@ def run(run) -> dict:
         "failed": failed,
         "end_to_end": {"cold_s": walls[0][1], "step_s": stats.median(plain)},
         "layers": layers,
-        "steps": steps[1:],
+        "steps": steps,
     }
     if run.trace:
         for key in splits[0]:
@@ -156,4 +162,9 @@ def run(run) -> dict:
                 [w for inst, w in walls[1:] if inst]
             ) - stats.median(plain),
         })
+        # the daily crawl tick's layers, after the lake's timed ticks
+        crawl = crawl_days.run_days(run)
+        result["attempted"] += crawl["attempted"]
+        result["failed"] += crawl["failed"]
+        layers.update(crawl["layers"])
     return result

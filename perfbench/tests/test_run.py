@@ -65,9 +65,10 @@ def traced_smoke(tmp_path_factory):
         "sf": 0.001,
         "min_warm_passes": 1,
         "nominal_pass_s": 1000,
-        # one relational query, one that builds k-means and IVF-index
-        # artifacts in the engine's tempdir stores
-        "queries": {"q1_pricing_summary": 6, "sim_ann_topk_ivf": 50},
+        # one relational query and one per kind of tempdir store the
+        # leak check watches: kmeans-fit-*, *-idx-* and sim-edges-*
+        "queries": {"q1_pricing_summary": 6, "sim_ann_topk_ivf": 50,
+                    "text_bm25_topk_indexed": 20, "graph_pagerank": 337},
     })
     spec_path.write_text(json.dumps(spec))
     before = _engine_artifacts()
@@ -88,7 +89,7 @@ def test_traced_layer_split_sums_to_the_pass_wall(traced_smoke):
     out = json.loads(res.stdout.strip().splitlines()[-1])
     assert set(out) == {"correct", "attempted", "failed", "metrics"}
     assert out["correct"] and out["failed"] == 0
-    assert out["attempted"] == 2 * (1 + 6)  # cold pass + six warm passes
+    assert out["attempted"] == 4 * (1 + 8)  # cold pass + eight warm passes
     m = {k: v["value"] for k, v in out["metrics"].items()}
     split = sum(m[k] for k in (
         "registry.construct_s", "catalyst.analyze_s", "catalyst.optimize_s",
@@ -100,7 +101,8 @@ def test_traced_layer_split_sums_to_the_pass_wall(traced_smoke):
         abs(m["trace.split_overhead_s"]) + 0.1 * m["trace.step_s"])
     assert m["exec.job_s"] + m["exec.driver_gap_s"] == pytest.approx(
         m["trace.step_s"], rel=0.5)
-    assert m["artifacts.dirs"] >= 1 and m["artifacts.bytes"] > 0
-    assert m["query.samples"] == 2 * 6  # every warm pass
+    # kmeans-fit, search-idx and sim-edges stores were really written
+    assert m["artifacts.dirs"] >= 3 and m["artifacts.bytes"] > 0
+    assert m["query.samples"] == 4 * 4  # the four plain warm passes
     assert m["box.probe_s"] > 0 and m["box.probe_after_s"] > 0
     assert m["plan.exchanges"] >= 1 and m["exec.jobs"] >= 1

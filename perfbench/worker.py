@@ -46,7 +46,7 @@ class Run:
     def start_session(self):
         from etl_tpch_spark.session import get_spark
 
-        extra = {"spark.driver.memory": "4g"}
+        extra = {}
         if self.trace:
             self.event_dir = os.path.join(self.work, "eventlog")
             os.makedirs(self.event_dir)
@@ -73,11 +73,11 @@ class Run:
             for b in mf.getGarbageCollectorMXBeans()
         ) / 1000.0
 
-    def probe(self) -> float:
-        """The repo's fixed box-calibration probe (best of two reps)."""
+    def probe(self, reps: int = 2) -> float:
+        """The repo's fixed box-calibration probe (best of ``reps``)."""
         from bench import _spark_probe
 
-        return _spark_probe(self.spark, reps=2)
+        return _spark_probe(self.spark, reps=reps)
 
     def event_log(self) -> dict[str, list]:
         """The run's parsed event log; call after the session stopped."""
@@ -134,6 +134,11 @@ def main() -> int:
     module = importlib.import_module(run.workload)
     try:
         result = module.run(run)
+        if not run.trace:
+            # after the timed section, so the cold operation stays cold;
+            # marks a run taken while the box was slow, never rescales it
+            print(f"# box.probe_s after the timed section: "
+                  f"{run.probe(reps=1)}", file=sys.stderr)
     finally:
         if run.spark is not None:
             run.spark.stop()
