@@ -281,11 +281,12 @@ def main() -> None:
     timings: dict[str, float] = {}
     # first-rep walls (VERDICT r11 #4): the best-of-N headline reports
     # warm steady state; rep 1 additionally carries every within-
-    # process amortization (_QTERM_CACHE/_PROBE_CACHE routing memos,
-    # persisted-frame builds), so emitting it beside the best makes
-    # the warm-protocol amortization a MEASUREMENT instead of a
-    # docstring claim, and bounds any future session cache's cold
-    # cost.  Additions-only: the headline metric is unchanged.
+    # process amortization (cache.memo entries: query-term and
+    # probe-routing memos, persisted-frame builds), so emitting it
+    # beside the best makes the warm-protocol amortization a
+    # MEASUREMENT instead of a docstring claim, and bounds any future
+    # session cache's cold cost.  Additions-only: the headline metric
+    # is unchanged.
     first_reps: dict[str, float] = {}
     for idx, name in enumerate(names):
         fn = all_queries[name].fn

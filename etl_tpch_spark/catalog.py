@@ -15,11 +15,11 @@ change for 100 TB beyond the path.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .cache import memo
 from .schemas import TABLE_NAMES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -30,37 +30,18 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 def table_stamp(sf_dir: str, name: str) -> str:
-    """Session-cache key for ``sf_dir``'s ``name`` table: realpath +
+    """Staleness stamp of ``sf_dir``'s ``name`` table: realpath +
     (mtime_ns, size) of the parquet, so a regenerated fixture at the
-    same path can never hit a stale cached derivation — the ONE
-    definition of the staleness recipe every per-session cache keys on
-    (k-means fits, edge lists, reference LM, query-term rows,
-    scratch_index_dir / _reused_index markers)."""
+    same path can never hit a stale derivation — the ONE staleness
+    recipe: the ``version`` of every table-derived cache.memo entry and
+    the stamp of every table-derived cache.stored artifact and
+    scratch_index_dir."""
     real = os.path.realpath(sf_dir)
     try:
         st = os.stat(table_path(real, name))
         return f"{real}|{st.st_mtime_ns}-{st.st_size}"
     except OSError:
         return real
-
-
-def evict_superseded(cache: dict, match) -> None:
-    """Drop (and unpersist) every cache entry whose key satisfies
-    ``match`` — called by the session caches right before inserting a
-    fresh entry for the same identity (same fixture path / index, new
-    stamp or version), so a regenerated fixture or a ticked index
-    releases the replaced persisted DataFrames instead of pinning one
-    generation of executor storage per rebuild for the application
-    lifetime.  Values may be DataFrames or tuples holding one in ANY
-    position (ADVICE r11: _PROBE_CACHE stores (rows, frame) — the old
-    first-element convention silently unpersisted the rows list)."""
-    for k in [k for k in cache if match(k)]:
-        v = cache.pop(k)
-        for item in v if isinstance(v, tuple) else (v,):
-            try:
-                item.unpersist()
-            except Exception:
-                pass  # plain values (lists, dicts) have nothing to release
 
 
 # Scan-spread helper (round 11, guide §2.5 "input skew: one huge
@@ -102,14 +83,6 @@ def spread_scan(df: DataFrame) -> DataFrame:
     return df
 
 
-# (application id, table name, stamp) → footer-inferred schema.  One
-# bench/oracle process opens the same fixture tables hundreds of times;
-# each open re-read the footer on the driver.  The stamp (realpath +
-# mtime+size) is the standard staleness recipe, so a regenerated
-# fixture re-infers; superseded stamps are evicted on insert.
-_TABLE_SCHEMA_CACHE: dict[tuple[str, str, str], object] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy scan of one table. Schema comes from parquet footers (exact,
     session-cached per fixture stamp); explicit schemas in `schemas.py`
@@ -122,24 +95,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     double division: ns epochs exceed 2^53)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, name)
-    key = (
-        spark.sparkContext.applicationId,
-        name,
+    # one bench/oracle process opens the same fixture tables hundreds
+    # of times; each open re-read the footer on the driver
+    inferred = []  # a miss returns the frame it inferred from
+
+    def infer():
+        inferred.append(spark.read.parquet(path))
+        return inferred[0].schema
+
+    schema = memo(
+        spark,
+        "table-schema",
+        (name, os.path.realpath(sf_dir)),
         table_stamp(sf_dir, name),
+        infer,
     )
-    cached = _TABLE_SCHEMA_CACHE.get(key)
-    if cached is not None:
-        df = spark.read.schema(cached).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        evict_superseded(
-            _TABLE_SCHEMA_CACHE,
-            lambda k: k[0] == key[0]
-            and k[1] == key[1]
-            and k[2].split("|", 1)[0] == key[2].split("|", 1)[0]
-            and k[2] != key[2],
-        )
-        _TABLE_SCHEMA_CACHE[key] = df.schema
+    df = inferred[0] if inferred else spark.read.schema(schema).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
@@ -173,27 +144,16 @@ class Tables:
         ]
 
 
-# register_views memo: session → (sf_dir, present table names) —
-# temp views survive for the session's lifetime, so re-registering
-# the SAME tables from the SAME sf_dir is 10 parquet-footer reads of
-# pure overhead per call (measured 1.5 s — 141× a DuckDB
-# information_schema probe).  A different sf_dir (the bench's
-# sf0.001 warmup → sf0.1 timed run) re-registers and re-keys.
-#
-# The key is the SESSION OBJECT held weakly (ADVICE r9): a raw
-# id(spark) key can be REUSED by CPython after the session is
-# garbage-collected, silently serving a dead session's memo hit to a
-# new session that has no views; the weak entry dies with its
-# session, which also bounds the memo's size.  The value folds the
-# names that actually EXISTED, so a table file appearing later under
-# the same sf_dir re-registers instead of being skipped forever
-# (os.path.exists probes are microseconds — the footer reads were
-# the cost being memoized).
-_REGISTERED_VIEWS: "weakref.WeakKeyDictionary[SparkSession, tuple[str, tuple[str, ...]]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
+# register_views memo: temp views survive for the session's lifetime,
+# so re-registering the SAME tables from the SAME sf_dir is 10
+# parquet-footer reads of pure overhead per call (measured 1.5 s —
+# 141× a DuckDB information_schema probe).  One entry per session
+# (temp views are per-session state; cache.memo keys the session
+# object weakly): a different sf_dir re-registers, and the version
+# folds the names that actually EXISTED, so a table file appearing
+# later under the same sf_dir re-registers instead of being skipped
+# forever (os.path.exists probes are microseconds — the footer reads
+# were the cost being memoized).
 def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:
     """Register each table as a temp view so `spark.sql` queries see the
     same names the DuckDB oracle pre-registers (SURVEY.md §5).  Goes
@@ -203,20 +163,20 @@ def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:
     present = tuple(
         n for n in names if os.path.exists(table_path(sf_dir, n))
     )
-    key = (sf_dir, present)
-    if _REGISTERED_VIEWS.get(spark) == key:
-        return
-    for name in present:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    _REGISTERED_VIEWS[spark] = key
+
+    def build() -> None:
+        for name in present:
+            load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+    memo(spark, "temp-views", None, (sf_dir, present), build)
 
 
 def artifact_store(kind: str, identity: str, stamp: str) -> tuple[str, bool]:
-    """THE stamped-artifact directory recipe, shared by every
-    build-once/open-many store (kmeans fits, graph edge lists,
-    _reused_index's ANN/LM indexes): one directory per
-    (kind, identity, stamp) GENERATION under the system tempdir, with
-    a ``_BUILD_COMPLETE`` marker written last.
+    """THE stamped-artifact directory recipe under cache.stored, the
+    build-once/open-many lifecycle of every on-disk store (kmeans fits,
+    graph edge lists, the ANN/LM/search indexes, the stored VARIANT
+    events): one directory per (kind, identity, stamp) GENERATION under
+    the system tempdir, with a ``_BUILD_COMPLETE`` marker written last.
 
     Returns ``(dir, complete)`` — ``complete`` iff the marker holds
     exactly ``stamp``.  A new stamp (regenerated fixture, changed
@@ -224,8 +184,8 @@ def artifact_store(kind: str, identity: str, stamp: str) -> tuple[str, bool]:
     files that a live lazy DataFrame from the previous generation may
     still reference — the rmtree-in-place race the round-7 review
     flagged.  Stale generations persist until the tempdir is cleaned
-    (regeneration is rare and /tmp is ephemeral).  Builders may
-    rmtree their OWN incomplete generation before writing (no marker
+    (regeneration is rare and /tmp is ephemeral).  cache.stored
+    rmtrees only an INCOMPLETE generation before building (no marker
     ⇒ no reader ever validated it).  Cross-PROCESS builds of the same
     generation are benign for deterministic artifacts (both write
     identical content; marker content equal) but are not locked —
@@ -255,7 +215,7 @@ def scratch_index_dir(kind: str, sf_dir: str, *, wipe: bool = False) -> str:
     ``sf_dir``'s tables — one dir per (kind, dataset) REUSED across
     invocations instead of a fresh mkdtemp leaked per run.
 
-    The key folds in the documents table's (mtime, size), so a
+    The key is the documents table's catalog.table_stamp, so a
     regenerated fixture at the same path can never hit a stale index.
     ``wipe=False`` (append-style indexes with idempotent batch ids):
     reuse IS the lifecycle — the second run finds a warm index and
@@ -265,13 +225,8 @@ def scratch_index_dir(kind: str, sf_dir: str, *, wipe: bool = False) -> str:
     import shutil
     import tempfile
 
-    real = os.path.realpath(sf_dir)
-    try:
-        st = os.stat(table_path(real, "documents"))
-        stamp = f"{st.st_mtime_ns}-{st.st_size}"
-    except OSError:
-        stamp = "nodocs"
-    key = hashlib.md5(f"{real}|{stamp}".encode()).hexdigest()[:12]
+    stamp = table_stamp(sf_dir, "documents")
+    key = hashlib.md5(stamp.encode()).hexdigest()[:12]
     path = os.path.join(tempfile.gettempdir(), f"{kind}-{key}")
     if wipe and os.path.exists(path):
         shutil.rmtree(path)

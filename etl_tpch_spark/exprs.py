@@ -95,23 +95,43 @@ def _split_schema(schema: str) -> list[tuple[str, str]]:
     return out
 
 
+# integral SQL type → bit width (the value range a cell must fit)
+_INT_BITS = {
+    "tinyint": 8, "byte": 8, "smallint": 16, "short": 16,
+    "int": 32, "integer": 32, "bigint": 64, "long": 64,
+}
+
+
 def _values_cell(v, typ: str) -> str:
+    """SQL literal of one cell, checked STRICTLY against its declared
+    type the way ``createDataFrame``'s verifier is (a float in an
+    integral column, a non-str in a STRING column, an int in a DOUBLE
+    or TIMESTAMP column); a mismatch or an unrendered type raises
+    TypeError/ValueError so values_frame falls back to
+    ``createDataFrame`` — which then coerces or raises exactly as it
+    always does — instead of silently coercing the literal here."""
     t = typ.lower()
     if v is None:
         return f"CAST(NULL AS {typ})"
-    if t.startswith("array"):
+    if t.startswith("array<"):
+        if not isinstance(v, (list, tuple)):
+            raise TypeError(f"{v!r} is not an {typ}")
         elem = typ[typ.index("<") + 1 : typ.rindex(">")]
         return (
             f"array({', '.join(_values_cell(e, elem) for e in v)})"
         )
-    if t in ("string", "varchar"):
-        return sql_str(str(v))
-    if t in ("double", "float", "real"):
+    if t in ("string", "varchar") and isinstance(v, str):
+        return sql_str(v)
+    if t in ("double", "float") and isinstance(v, float):
         return sql_double(v)
-    if t in ("boolean", "bool"):
+    if t == "boolean" and isinstance(v, bool):
         return "true" if v else "false"
-    # integral types: render exactly
-    return str(int(v))
+    bits = _INT_BITS.get(t)
+    if bits and isinstance(v, int) and not isinstance(v, bool):
+        if not -(1 << (bits - 1)) <= v < 1 << (bits - 1):
+            raise ValueError(f"{v} out of range for {typ}")
+        return str(v)
+    raise TypeError(f"{v!r} is not a {typ} literal")
 
 
 def values_frame(spark, rows, schema: str, max_rows: int = 10_000):
@@ -129,16 +149,18 @@ def values_frame(spark, rows, schema: str, max_rows: int = 10_000):
     explicitly, so the schema is byte-identical to the
     ``createDataFrame`` form (VALUES alone would infer INT for small
     integers); ``ConvertToLocalRelation`` folds the casting projection
-    back into the relation at optimization.  Supports the scalar types
-    and array<...> (rows as Python lists); falls back to
-    ``createDataFrame`` for anything it cannot render, and for row
-    sets past ``max_rows`` (a VALUES statement is parsed/analyzed
+    back into the relation at optimization.  Supports the integral,
+    double/float, string and boolean types and array<...> (rows as
+    Python lists); falls back to ``createDataFrame`` for any other type
+    (decimal, timestamp, ...), for any cell whose Python type does not
+    match its declared type (_values_cell), and for row sets past
+    ``max_rows`` (a VALUES statement is parsed/analyzed
     driver-side — fine for routing tables, wrong for data)."""
     rows = rows if isinstance(rows, (list, tuple)) else list(rows)
     if len(rows) > max_rows:
         return spark.createDataFrame(rows, schema)
-    cols = _split_schema(schema)
     try:
+        cols = _split_schema(schema)
         tuples = ", ".join(
             "("
             + ", ".join(

@@ -81,13 +81,6 @@ class _MergeConflict(Exception):
 # predicate spec for read_where: (col, op, value) conjunctions
 _PRED_OPS = ("=", "<", "<=", ">", ">=")
 
-# (application id, table realpath, version, merged) → resolved snapshot
-# schema.  A committed version's file set — hence its schema — is
-# immutable, so the entry can never go stale; superseded versions of
-# the same table are evicted on insert (TxTable.read).
-_SCHEMA_CACHE: dict[tuple[str, str, int, bool], object] = {}
-
-
 def _enc(v):
     """Normalize a stats/predicate value into its JSON-comparable form.
     Dates/timestamps become ISO strings (lexicographic order == time
@@ -1066,11 +1059,12 @@ class TxTable:
 
         ``dedup_keys`` (round 12, guide §6 — write the layout the
         reads want): additionally collapse duplicate key rows during
-        the rewrite (``max`` of every non-key column — the SAME
-        merge the read-side dedup aggregates apply, e.g.
-        SearchIndex.probe's ``max(tf)``), and mark the commit entry
-        ``canonical: [keys]`` so readers can SKIP their per-query
-        dedup exchange while the snapshot head stays this compact.
+        the rewrite (``max`` of the ONE non-key column — ValueError
+        otherwise — the SAME merge the read-side dedup aggregates
+        apply, e.g. SearchIndex.probe's ``max(tf)``), and mark the
+        commit entry ``canonical: [keys]`` so readers can SKIP their
+        per-query dedup exchange while the snapshot head stays this
+        compact.
         Duplicates only exist after the one replay mode exactly-once
         ids cannot close (wiped checkpoint over re-bundled batches),
         so the rewrite is a row-identical no-op in normal operation —
@@ -1102,6 +1096,13 @@ class TxTable:
         df = self.read(spark, version=start_v)
         if dedup_keys:
             others = [c for c in df.columns if c not in dedup_keys]
+            if len(others) != 1:
+                # a per-column max over several value columns could
+                # stitch one "row" from different duplicates
+                raise ValueError(
+                    f"dedup_keys={list(dedup_keys)} needs exactly one "
+                    f"non-key column, table has {others}"
+                )
             df = df.groupBy(*dedup_keys).agg(
                 *[F.max(c).alias(c) for c in others]
             )
@@ -1288,12 +1289,12 @@ class TxTable:
         holding schema-evolved files (append(merge_schema=True))
         unions file schemas; uniform snapshots skip the footer merge.
 
-        The resolved schema is session-cached per (application, table
-        path, version): a committed version's file set is immutable,
-        so its schema is too — Delta keeps the schema in the log for
-        exactly this reason.  Repeated snapshot reads (every indexed
-        query re-opens its index tables) then skip the footer-
-        inference job instead of re-launching it per read."""
+        The resolved schema is memoized per (session, table path) at
+        the read version (cache.memo): a committed version's file set
+        is immutable, so its schema is too — Delta keeps the schema in
+        the log for exactly this reason.  Repeated snapshot reads
+        (every indexed query re-opens its index tables) then skip the
+        footer-inference job instead of re-launching it per read."""
         v = self.latest_version() if version is None else version
         if v is None:
             raise ValueError("table has no committed data")
@@ -1312,26 +1313,24 @@ class TxTable:
         if merged:
             reader = reader.option("mergeSchema", "true")
         paths = [os.path.join(self.path, f) for f in files]
-        key = (
-            spark.sparkContext.applicationId,
+        from ..cache import memo
+
+        inferred = []  # a miss returns the frame it inferred from
+
+        def infer():
+            inferred.append(reader.parquet(*paths))
+            return inferred[0].schema
+
+        schema = memo(
+            spark,
+            "snapshot-schema",
             os.path.realpath(self.path),
-            v,
-            merged,
+            (v, merged),
+            infer,
         )
-        cached = _SCHEMA_CACHE.get(key)
-        if cached is not None:
-            return reader.schema(cached).parquet(*paths)
-        df = reader.parquet(*paths)
-        # one schema per (app, path): versions of a table supersede
-        # each other, so drop older versions' entries on insert
-        for k in [
-            k
-            for k in _SCHEMA_CACHE
-            if k[0] == key[0] and k[1] == key[1] and k[2] != v
-        ]:
-            del _SCHEMA_CACHE[k]
-        _SCHEMA_CACHE[key] = df.schema
-        return df
+        if inferred:
+            return inferred[0]
+        return reader.schema(schema).parquet(*paths)
 
     def diff(
         self,

@@ -502,9 +502,6 @@ def events_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- round 11: stored VARIANT
 
-_VARIANT_STORE_LOCK = __import__("threading").Lock()
-
-
 def _variant_events_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once stored-VARIANT twin of the events table: the JSON
     payload is parsed ONCE at ingest (``parse_json``) and the binary
@@ -515,25 +512,16 @@ def _variant_events_path(spark: SparkSession, sf_dir: str) -> str:
     parse-once-extract-many claim of ``events_variant_extract``
     PHYSICAL: at 100 TB the parse cost is paid once on the ingest
     cadence (amortized like every persisted index here), and the
-    stored binary is the query-time input.  Same stamped-generation
-    store as the ANN/LM indexes (catalog.artifact_store): the stamp
-    folds the source parquet's (mtime, size), so a regenerated
-    fixture can never hit a stale artifact."""
+    stored binary is the query-time input.  A cache.stored artifact
+    per events-table stamp, so a regenerated fixture can never hit a
+    stale artifact."""
     import os
-    import shutil
 
-    from ..catalog import artifact_store, mark_store_complete, table_path
+    from ..cache import stored
+    from ..catalog import table_stamp
 
-    with _VARIANT_STORE_LOCK:
-        real = os.path.realpath(sf_dir)
-        st = os.stat(table_path(real, "events"))
-        stamp = f"{st.st_mtime_ns}-{st.st_size}-v1"
-        path, complete = artifact_store("variant-events", real, stamp)
+    def build(path: str) -> str:
         data = os.path.join(path, "data")
-        if complete:
-            return data
-        shutil.rmtree(path, ignore_errors=True)  # incomplete gen only
-        os.makedirs(path, exist_ok=True)
         (
             Tables(spark, sf_dir)
             .events.select(
@@ -542,8 +530,15 @@ def _variant_events_path(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(data)
         )
-        mark_store_complete(path, stamp)
         return data
+
+    return stored(
+        "variant-events",
+        os.path.realpath(sf_dir),
+        f"{table_stamp(sf_dir, 'events')}|v1",
+        build,
+        lambda path: os.path.join(path, "data"),
+    )
 
 
 @query(

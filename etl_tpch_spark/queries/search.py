@@ -30,6 +30,8 @@ with the ANN family (queries/similarity.py).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -197,45 +199,38 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------- index-served lexical
 
 
-# (application id, documents stamp) → collected (query_id, term) rows
-# of the 5 fixed query docs.  The tokenization is deterministic per
-# fixture and |Q|-sized (a few hundred rows), so caching it removes
-# one documents-table read job per hybrid invocation — query-side
-# analysis amortized exactly like a serving tier would.
-_QTERM_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _query_term_rows(spark: SparkSession, sf_dir: str) -> list:
+    """Collected (query_id, term) rows of the 5 fixed query docs,
+    memoized per session and documents stamp (cache.memo).  The
+    tokenization is deterministic per fixture and |Q|-sized (a few
+    hundred rows), so the memo removes one documents-table read job
+    per hybrid invocation — query-side analysis amortized exactly like
+    a serving tier would."""
+    from ..cache import memo
     from ..catalog import table_stamp
 
-    key = (spark.sparkContext.applicationId, table_stamp(sf_dir, "documents"))
-    hit = _QTERM_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from ..catalog import evict_superseded
-
-    real = key[1].split("|", 1)[0]
-    evict_superseded(
-        _QTERM_CACHE,
-        lambda k: k[0] == key[0]
-        and k[1].split("|", 1)[0] == real
-        and k[1] != key[1],
-    )
-    t = Tables(spark, sf_dir)
-    rows = (
-        t.documents.filter(F.col("doc_id").isin(QUERY_IDS))
-        .select(
-            F.col("doc_id").alias("query_id"),
-            F.explode(
-                F.array_distinct(
-                    tokens(F.coalesce(F.col("text"), F.lit("")))
-                )
-            ).alias("term"),
+    def build() -> list:
+        t = Tables(spark, sf_dir)
+        return (
+            t.documents.filter(F.col("doc_id").isin(QUERY_IDS))
+            .select(
+                F.col("doc_id").alias("query_id"),
+                F.explode(
+                    F.array_distinct(
+                        tokens(F.coalesce(F.col("text"), F.lit("")))
+                    )
+                ).alias("term"),
+            )
+            .collect()
         )
-        .collect()
+
+    return memo(
+        spark,
+        "query-terms",
+        os.path.realpath(sf_dir),
+        table_stamp(sf_dir, "documents"),
+        build,
     )
-    _QTERM_CACHE[key] = rows
-    return rows
 
 
 def _search_index_for(spark: SparkSession, sf_dir: str):

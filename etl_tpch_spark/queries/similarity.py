@@ -8,12 +8,11 @@ the LSH-bucketed ANN is hash-checked, not just row-counted.
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Tables
+from ..catalog import Tables, table_stamp
 from ..dedup.hashing import sql_cosine_fold, sql_hyperplane_signature
 from ..registry import REGISTRY, query
 from ..similarity.ann import (
@@ -33,13 +32,6 @@ TOP_K = 10
 PAIR_THRESHOLD = 0.4
 
 
-def _emb_stamp(sf_dir: str) -> str:
-    """Session-cache key for in-query k-means fits over ``sf_dir``'s
-    embeddings (catalog.table_stamp — realpath + mtime/size, so a
-    regenerated fixture can never hit a stale fit)."""
-    from ..catalog import table_stamp
-
-    return table_stamp(sf_dir, "embeddings")
 BUCKET_BITS = 8
 
 _IDS = ", ".join(str(i) for i in QUERY_IDS)
@@ -349,7 +341,7 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     return kmeans_assignments(
-        t.embeddings, cache_key=_emb_stamp(sf_dir)
+        t.embeddings, cache_key=table_stamp(sf_dir, "embeddings")
     )
 
 
@@ -420,7 +412,9 @@ def quantized_pairs_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     return quantized_cosine_pairs_cells(
-        t.embeddings, PAIR_THRESHOLD, cache_key=_emb_stamp(sf_dir)
+        t.embeddings,
+        PAIR_THRESHOLD,
+        cache_key=table_stamp(sf_dir, "embeddings"),
     )
 
 
@@ -481,11 +475,8 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk_ivf(
         t.embeddings, QUERY_IDS, TOP_K,
         n_cells=N_CELLS, n_probe=N_PROBE, iters=N_IVF_ITERS,
-        cache_key=_emb_stamp(sf_dir),
+        cache_key=table_stamp(sf_dir, "embeddings"),
     )
-
-
-_INDEX_BUILD_LOCK = threading.Lock()
 
 
 def _reused_index(
@@ -502,30 +493,19 @@ def _reused_index(
     by a previous invocation — returns results identical to a fresh
     build while reporting the lifecycle's true steady-state cost
     (build on the maintenance cadence, query many times; the same
-    warm-cache convention the bench protocol documents for LSH).  The
-    stamp folds the source parquet's (mtime, size) and the build
+    warm-cache convention the bench protocol documents for LSH).  A
+    cache.stored artifact per source-table stamp and build
     parameters, so a regenerated fixture or a parameter change maps
-    to a NEW generation directory (catalog.artifact_store — the one
-    shared stamped-store recipe; prior generations stay on disk for
-    any live readers).  Build-or-open is serialized per process
-    (threaded planners — the plan audit — must not race one index
-    dir's build)."""
-    import shutil
+    to a NEW generation directory."""
+    from ..cache import stored
 
-    from ..catalog import artifact_store, mark_store_complete, table_path
-
-    with _INDEX_BUILD_LOCK:
-        real = os.path.realpath(sf_dir)
-        st = os.stat(table_path(real, table))
-        stamp = f"{st.st_mtime_ns}-{st.st_size}-{params}"
-        path, complete = artifact_store(kind, real, stamp)
-        if complete:
-            return opener(path)
-        shutil.rmtree(path, ignore_errors=True)  # incomplete gen only
-        os.makedirs(path, exist_ok=True)
-        idx = builder(path)
-        mark_store_complete(path, stamp)
-        return idx
+    return stored(
+        kind,
+        os.path.realpath(sf_dir),
+        f"{table_stamp(sf_dir, table)}|{params}",
+        builder,
+        opener,
+    )
 
 
 def _ivf_index_for(spark: SparkSession, sf_dir: str):
@@ -563,8 +543,6 @@ def ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     idx = _ivf_index_for(spark, sf_dir)
     queries_df = t.embeddings.filter(F.col("vec_id").isin(QUERY_IDS))
-    from ..catalog import table_stamp
-
     return idx.topk(
         spark,
         queries_df,
@@ -589,7 +567,9 @@ def cosine_pairs_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     return cosine_pairs_threshold_cells(
-        t.embeddings, PAIR_THRESHOLD, cache_key=_emb_stamp(sf_dir)
+        t.embeddings,
+        PAIR_THRESHOLD,
+        cache_key=table_stamp(sf_dir, "embeddings"),
     )
 
 
@@ -808,7 +788,10 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     return pq_topk(
-        t.embeddings, QUERY_IDS, TOP_K, cache_key=_emb_stamp(sf_dir)
+        t.embeddings,
+        QUERY_IDS,
+        TOP_K,
+        cache_key=table_stamp(sf_dir, "embeddings"),
     ).withColumn("rnk", F.col("rnk").cast("int"))
 
 
@@ -942,7 +925,7 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivfpq_topk(
         t.embeddings, QUERY_IDS, TOP_K,
         n_cells=N_CELLS, n_probe=N_PROBE, cell_iters=N_IVF_ITERS,
-        cache_key=_emb_stamp(sf_dir),
+        cache_key=table_stamp(sf_dir, "embeddings"),
     ).withColumn("rnk", F.col("rnk").cast("int"))
 
 
@@ -1289,8 +1272,6 @@ def contrastive_negs_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     idx = _ivf_index_for(spark, sf_dir)
     queries_df = t.embeddings.filter(F.col("vec_id").isin(QUERY_IDS))
-    from ..catalog import table_stamp
-
     return idx.negatives(
         spark,
         queries_df,

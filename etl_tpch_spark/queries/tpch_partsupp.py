@@ -14,8 +14,9 @@ Derivation (arbitrary but fixed):
 
 Scale notes: the part⋈supplier build is a broadcast of supplier (the
 small side), and the derived relation is materialized ONCE per
-(session, sf_dir) via ``persist()`` — it is a fixture stand-in for a
-STORED base table, so rebuilding its ~5M rows inside every q2/q11 run
+(session, sf_dir, part stamp) via ``persist()`` (cache.memo) — it
+is a fixture stand-in for a STORED base table, so rebuilding its ~5M
+rows inside every q2/q11 run
 mischarges those queries for a synthesis the real workload never does
 (r4 VERDICT #5: q2 was 7.2× DuckDB, mostly this).  The warm-cache
 cost is the steady-state cost, same convention the bench protocol
@@ -46,32 +47,20 @@ _PARTSUPP_SQL = """
 """
 
 
-# (application id, part table_stamp) → persisted derived partsupp;
-# entries live for the session, like the LSH signature cache; a
-# regenerated fixture changes the stamp and evicts the stale build
-_PS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def derived_partsupp(t: Tables) -> DataFrame:
-    from ..catalog import evict_superseded, table_stamp
+    """The derived partsupp, persisted once per session and part-table
+    stamp (cache.memo): a regenerated fixture rebuilds and releases
+    the stale build."""
+    from ..cache import memo
+    from ..catalog import table_stamp
 
-    key = (
-        t._spark.sparkContext.applicationId,
+    return memo(
+        t._spark,
+        "derived-partsupp",
+        os.path.realpath(t._sf_dir),
         table_stamp(t._sf_dir, "part"),
+        lambda: _build_partsupp(t).persist(),
     )
-    cached = _PS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    real = key[1].split("|", 1)[0]
-    evict_superseded(
-        _PS_CACHE,
-        lambda k: k[0] == key[0]
-        and k[1].split("|", 1)[0] == real
-        and k[1] != key[1],
-    )
-    built = _build_partsupp(t).persist()
-    _PS_CACHE[key] = built
-    return built
 
 
 def _build_partsupp(t: Tables) -> DataFrame:

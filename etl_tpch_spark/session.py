@@ -30,6 +30,56 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+# The runtime-settable settings, defined ONCE: get_spark applies them
+# through the builder, tune_for_oracle through spark.conf.set on a
+# driver-provided session.
+RUNTIME_CONF = {
+    # event-time semantics match the DuckDB oracle on any machine
+    "spark.sql.session.timeZone": "UTC",
+    # pandas-UDF boundary is columnar (vectorized), never row pickle
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # AQE: runtime partition coalescing, skew splits, join demotion
+    "spark.sql.adaptive.enabled": "true",
+    # InferFiltersFromGenerate injects `size(e) > 0 AND isnotnull(e)`
+    # below every non-outer explode — for a COMPUTED array that
+    # re-evaluates the whole expression twice more per row in an
+    # interpreted Filter (measured 6×: the classifier's md5-bucket
+    # explode went 4.96 s → 0.81 s at sf0.1 with the rule off).
+    # Generate already skips null/empty inputs, so excluding the
+    # rule is semantics-free; the engine's hot explodes (shingles,
+    # spans, n-grams, buckets) are all computed arrays where the
+    # inferred filter can never prune a scan.
+    "spark.sql.optimizer.excludedRules": (
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+    ),
+    # Scan-split packing charges each file spark.sql.files.
+    # openCostInBytes (default 4 MB — a spinning-disk-era open
+    # cost).  With inputs smaller than cores×4 MB that floor
+    # serializes the scan onto a handful of tasks (maxSplitBytes =
+    # max(openCost, bytes/defaultParallelism)); on NVMe/object
+    # storage the real open cost is far below 256 KB.  This keeps
+    # scan parallelism tracking available cores for small inputs
+    # at ANY core count (bytesPerCore still dominates at scale, so
+    # it is a no-op on 100 TB tables) — measured −10% on the
+    # relational bench family, q1 0.40 → 0.23 s (guide §6).
+    "spark.sql.files.openCostInBytes": os.environ.get(
+        "SPARK_GRAFT_OPEN_COST", str(256 * 1024)
+    ),
+    # Allow co-partitioned joins on a SUBSET of the join keys
+    # (pre-3.3 planner behavior): when both join children are
+    # already hash-partitioned on the same subset — e.g. the RRF
+    # fusion's full-outer join on (query_id, doc_id) whose inputs
+    # both come out of rank windows partitioned by query_id — the
+    # join reuses that partitioning instead of re-exchanging both
+    # sides on the full key (guide §2.4 "two operations keyed the
+    # same way can share one exchange").  Semantics-free (equal
+    # full keys still co-locate under the subset hash); measured:
+    # search_hybrid_rrf_indexed 13 → 11 exchanges, 2.45 → 1.76 s
+    # warm interleaved A/B at sf0.1; full sf0.01 oracle diff green.
+    "spark.sql.requireAllClusterKeysForCoPartition": "false",
+}
+
+
 def get_spark(
     app_name: str = "etl_tpch_spark",
     *,
@@ -48,109 +98,37 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{n}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # InferFiltersFromGenerate injects `size(e) > 0 AND isnotnull(e)`
-        # below every non-outer explode — for a COMPUTED array that
-        # re-evaluates the whole expression twice more per row in an
-        # interpreted Filter (measured 6×: the classifier's md5-bucket
-        # explode went 4.96 s → 0.81 s at sf0.1 with the rule off).
-        # Generate already skips null/empty inputs, so excluding the
-        # rule is semantics-free; the engine's hot explodes (shingles,
-        # spans, n-grams, buckets) are all computed arrays where the
-        # inferred filter can never prune a scan.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer."
-            "InferFiltersFromGenerate",
-        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
-        # Scan-split packing charges each file spark.sql.files.
-        # openCostInBytes (default 4 MB — a spinning-disk-era open
-        # cost).  With inputs smaller than cores×4 MB that floor
-        # serializes the scan onto a handful of tasks (maxSplitBytes =
-        # max(openCost, bytes/defaultParallelism)); on NVMe/object
-        # storage the real open cost is far below 256 KB.  This keeps
-        # scan parallelism tracking available cores for small inputs
-        # at ANY core count (bytesPerCore still dominates at scale, so
-        # it is a no-op on 100 TB tables) — measured −10% on the
-        # relational bench family, q1 0.40 → 0.23 s (guide §6).
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST", str(256 * 1024)),
-        )
         # Client-side call-site capture (Spark 4's DataFrame debugging)
         # wraps EVERY DataFrame/Column API call in a Python stack walk
         # plus 3 py4j round-trips (conf.get + PySparkCurrentOrigin.set/
         # clear).  cProfile of a warm indexed-retrieval rep measured it
         # at ~17% of wall (97 wrapped calls, 0.92 s of 5.4 s) — pure
         # error-message enrichment, no effect on plans or results
-        # (guide §4: shrink the Python⇄JVM boundary).
+        # (guide §4: shrink the Python⇄JVM boundary).  A static
+        # config: a driver-provided session keeps its own value.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # Allow co-partitioned joins on a SUBSET of the join keys
-        # (pre-3.3 planner behavior): when both join children are
-        # already hash-partitioned on the same subset — e.g. the RRF
-        # fusion's full-outer join on (query_id, doc_id) whose inputs
-        # both come out of rank windows partitioned by query_id — the
-        # join reuses that partitioning instead of re-exchanging both
-        # sides on the full key (guide §2.4 "two operations keyed the
-        # same way can share one exchange").  Semantics-free (equal
-        # full keys still co-locate under the subset hash); measured:
-        # search_hybrid_rrf_indexed 13 → 11 exchanges, 2.45 → 1.76 s
-        # warm interleaved A/B at sf0.1; full sf0.01 oracle diff green.
-        .config(
-            "spark.sql.requireAllClusterKeysForCoPartition", "false"
-        )
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in {**RUNTIME_CONF, **(extra_conf or {})}.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
 
 def tune_for_oracle(spark: SparkSession) -> SparkSession:
-    """Settings that must hold on a *driver-provided* session for the
-    DuckDB-oracle comparison to be stable (timezone above all)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        # must land before the first wrapped DataFrame call of the
-        # process: pyspark caches this gate on first use (see get_spark)
-        spark.conf.set(
-            "spark.python.sql.dataFrameDebugging.enabled", "false"
-        )
-    except Exception:
-        pass
-    try:  # runtime-settable in all recent Spark versions
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        # same rationale as get_spark: NVMe-era per-file open cost so
-        # small-input scan parallelism tracks cores (no-op at scale)
-        spark.conf.set(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST", str(256 * 1024)),
-        )
-        # same rationale as get_spark: the inferred pre-Generate filter
-        # re-evaluates computed arrays per row (measured 6× on the
-        # classifier bucket explode)
-        spark.conf.set(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer."
-            "InferFiltersFromGenerate",
-        )
-        # same rationale as get_spark: subset co-partitioning lets
-        # window-partitioned join inputs share one exchange
-        spark.conf.set(
-            "spark.sql.requireAllClusterKeysForCoPartition", "false"
-        )
-    except Exception:
-        pass
+    """Apply RUNTIME_CONF to a *driver-provided* session: the settings
+    that must hold for the DuckDB-oracle comparison to be stable
+    (timezone above all) plus the engine's runtime tuning."""
+    for k, v in RUNTIME_CONF.items():
+        try:
+            spark.conf.set(k, v)
+        except Exception:
+            pass  # not runtime-settable on this Spark build
     return spark
 
 

@@ -35,14 +35,6 @@ from ..pipeline.txlog import TxTable
 from .ann import _pair_cosine, _pair_cosine_sql, _with_norm
 from .kmeans import quantize, spark_sql_d2
 
-# (application id, index path, centroids version, query-set token,
-# n_probe) → (collected probe-routing rows [(query_id, cell)], the
-# literal DataFrame built from them) — see
-# IVFIndex.candidates(cache_token=...); |Q|·n_probe longs per entry,
-# superseded versions/tokens evicted on insert.
-_PROBE_CACHE: dict[tuple, tuple] = {}
-
-
 class IVFIndex:
     """A built (trained + materialized) IVF index rooted at ``path``."""
 
@@ -181,51 +173,16 @@ class IVFIndex:
         r4 #4 charged to the indexed retrieval path).
 
         ``cache_token``: optional stable identity of the QUERY SET
-        (e.g. (corpus stamp, query ids)).  When given, the collected
-        probe-routing rows — |Q|·n_probe (query_id, cell) longs, a
-        pure deterministic function of the stored centroids and the
-        query embeddings — are session-cached per (application, index
-        path, centroids version, token, n_probe), the `_QTERM_CACHE`
-        convention: a serving tier amortizes query-side routing, and
-        a fresh process or a retrained/ticked index recomputes (the
-        centroids version is in the key)."""
+        (e.g. (corpus stamp, query ids)).  When given, the probe
+        routing — |Q|·n_probe (query_id, cell) longs, a pure
+        deterministic function of the stored centroids and the query
+        embeddings — is memoized per session and index path at the
+        (centroids version, token, n_probe) version (cache.memo): a
+        serving tier amortizes query-side routing, and a fresh session
+        or a retrained/ticked index recomputes."""
         queries = queries.localCheckpoint(eager=False)
-        ck = None
-        hit = None
-        if cache_token is not None:
-            ck = (
-                spark.sparkContext.applicationId,
-                self.path,
-                self.cent_t.latest_version(),
-                cache_token,
-                int(n_probe),
-            )
-            hit = _PROBE_CACHE.get(ck)
-            if hit is not None:
-                # rows AND the literal frame built from them (round 11:
-                # re-creating the local relation per query cost ~35
-                # round-trips; the plan object is session-local and
-                # immutable, so reuse is free).  The frame is bound to
-                # the session that built it — a hit from a DIFFERENT
-                # session of the same application (spark.newSession)
-                # rebuilds the local relation from the cached rows
-                # (ADVICE r11)
-                q_cell_rows, q_cells = hit
-                if q_cells.sparkSession is not spark:
-                    from ..exprs import values_frame
 
-                    q_cells = values_frame(
-                        spark, q_cell_rows, "query_id long, cell long"
-                    )
-                    _PROBE_CACHE[ck] = (q_cell_rows, q_cells)
-            else:
-                from ..catalog import evict_superseded
-
-                evict_superseded(
-                    _PROBE_CACHE,
-                    lambda k: k[:2] == ck[:2] and k != ck,
-                )
-        if hit is None:
+        def route():
             q_quant = quantize(queries)
             cent = self.centroids(spark)
             q_cells_plan = (
@@ -252,18 +209,29 @@ class IVFIndex:
             # plan — two broadcast builds + a window per query; values
             # are identical by construction, it is the same rows that
             # were collected)
-            q_cell_rows = [
-                (r.query_id, r.cell) for r in q_cells_plan.collect()
-            ]
+            rows = [(r.query_id, r.cell) for r in q_cells_plan.collect()]
             from ..exprs import values_frame
 
             # LocalRelation, not a parallelized RDD: the |Q|·n_probe
-            # routing rows broadcast with zero tasks (round 12)
-            q_cells = values_frame(
-                spark, q_cell_rows, "query_id long, cell long"
+            # routing rows broadcast with zero tasks (round 12); the
+            # memo keeps the frame too — re-creating the local
+            # relation per query cost ~35 round-trips (round 11)
+            return rows, values_frame(
+                spark, rows, "query_id long, cell long"
             )
-            if ck is not None:
-                _PROBE_CACHE[ck] = (q_cell_rows, q_cells)
+
+        if cache_token is None:
+            q_cell_rows, q_cells = route()
+        else:
+            from ..cache import memo
+
+            q_cell_rows, q_cells = memo(
+                spark,
+                "ivf-probe",
+                self.path,
+                (self.cent_t.latest_version(), cache_token, int(n_probe)),
+                route,
+            )
         probed_cells = sorted({c for _q, c in q_cell_rows})
         cells = self.cells(spark).filter(
             "cell IN (" + ", ".join(str(int(c)) for c in probed_cells) + ")"

@@ -28,7 +28,6 @@ corpus-sized traffic never moves.
 from __future__ import annotations
 
 import os
-import threading
 
 import numpy as np
 import pandas as pd
@@ -154,86 +153,6 @@ def _init_centroids(q: DataFrame, k: int) -> DataFrame:
     )
 
 
-# (application id, caller cache key, k, iters) → (persisted assignment,
-# trained centroids).  Lloyd is deterministic (integer-exact), so a
-# cached fit is bit-identical to a fresh one; queries that train cells
-# in-query (the unindexed IVF / cell-pair forms) stop paying a full
-# training pass per invocation — the same session-cache convention as
-# derived_partsupp and the LSH signature cache, and the steady-state
-# cost the bench protocol documents.
-_FIT_CACHE: dict[
-    tuple[str, str, int, int],
-    tuple[DataFrame, list[tuple[int, list[int]]]],
-] = {}
-_FIT_LOCK = threading.Lock()
-
-
-def _fit_store(cache_key: str, k: int, iters: int) -> tuple[str, bool]:
-    """(generation dir, complete) for the persisted fit — the shared
-    stamped-artifact recipe (catalog.artifact_store): identity is the
-    corpus path + training params, the stamp is the full table_stamp,
-    and a regenerated fixture gets a NEW directory (live readers of
-    the old generation keep their files)."""
-    from ..catalog import artifact_store
-
-    real = cache_key.split("|", 1)[0]
-    return artifact_store(
-        "kmeans-fit", f"{real}|{k}|{iters}", cache_key
-    )
-
-
-def _load_persisted_fit(
-    spark, cache_key: str, k: int, iters: int
-) -> tuple[DataFrame, list[tuple[int, list[int]]]] | None:
-    """Open a stored fit if its generation is complete for exactly
-    ``cache_key`` (same corpus path AND same parquet mtime/size);
-    None ⇒ train fresh."""
-    from ..pipeline.txlog import TxTable
-
-    root, complete = _fit_store(cache_key, k, iters)
-    if not complete:
-        return None
-    cent_t = TxTable(os.path.join(root, "centroids"))
-    assign_t = TxTable(os.path.join(root, "assign"))
-    cents = sorted(
-        (r.cent_id, list(r.cv)) for r in cent_t.read(spark).collect()
-    )
-    final = assign_t.read(spark).select("vec_id", "cluster", "d2")
-    return final.persist(), cents
-
-
-def _store_fit(
-    spark,
-    cache_key: str,
-    k: int,
-    iters: int,
-    final: DataFrame,
-    cent_rows: list[tuple[int, list[int]]],
-) -> None:
-    """Materialize a trained fit as TxTables + stamp marker (the
-    IVFIndex build-once/query-many lifecycle, similarity/index.py):
-    `centroids` is K rows; `assign` is (vec_id, cluster, d2) — three
-    longs per corpus row, the IVF inverted-file shape, NOT the
-    embedding vectors.  Marker written LAST so a crashed build is
-    simply retrained; an incomplete generation has no validated
-    readers, so wiping it is safe."""
-    import shutil
-
-    from ..catalog import mark_store_complete
-    from ..pipeline.txlog import TxTable
-
-    root, _ = _fit_store(cache_key, k, iters)
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    TxTable(os.path.join(root, "centroids")).overwrite(
-        spark.createDataFrame(
-            cent_rows, "cent_id long, cv array<long>"
-        )
-    )
-    TxTable(os.path.join(root, "assign")).overwrite(final)
-    mark_store_complete(root, cache_key)
-
-
 def kmeans_fit(
     embeddings: DataFrame,
     k: int = K_CLUSTERS,
@@ -268,63 +187,49 @@ def kmeans_fit(
     assignment subtree would compute once per plan branch)."""
     if cache_key is None:
         return _fit_train(embeddings, k, iters, materialize=materialize)
-    ck = (
-        embeddings.sparkSession.sparkContext.applicationId,
-        cache_key,
-        k,
-        iters,
-    )
-    hit = _FIT_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    # concurrent planners (e.g. the threaded plan audit) must not race
-    # the store/load of one artifact dir: serialize the miss path;
-    # late arrivals then hit the memory cache
-    with _FIT_LOCK:
-        hit = _FIT_CACHE.get(ck)
-        if hit is not None:
-            return hit
-        # a regenerated fixture (same path, new stamp) supersedes the
-        # old fit — release its persisted assignment before rebuilding
-        from ..catalog import evict_superseded
+    from ..cache import memo, stored
+    from ..pipeline.txlog import TxTable
 
-        real = cache_key.split("|", 1)[0]
-        evict_superseded(
-            _FIT_CACHE,
-            lambda key: key[0] == ck[0]
-            and key[2:] == ck[2:]
-            and key[1].split("|", 1)[0] == real
-            and key[1] != cache_key,
-        )
-        # cold-session path: a fit trained by ANY earlier session over
-        # this exact corpus stamp is a stored artifact — load it
-        # instead of retraining (training is integer-exact, so the
-        # stored fit is bit-identical to a fresh one; VERDICT r6 #2)
-        stored = _load_persisted_fit(
-            embeddings.sparkSession, cache_key, k, iters
-        )
-        if stored is not None:
-            _FIT_CACHE[ck] = stored
-            return stored
+    spark = embeddings.sparkSession
+    # identity: corpus path + training params; version: the corpus
+    # stamp.  Lloyd is deterministic (integer-exact), so a memoized or
+    # stored fit is bit-identical to a fresh one: queries that train
+    # cells in-query (the unindexed IVF / cell-pair forms) stop paying
+    # a training pass per invocation, and a fit trained by ANY earlier
+    # session over this exact stamp is opened, not retrained
+    # (VERDICT r6 #2)
+    ident = f"{cache_key.split('|', 1)[0]}|{k}|{iters}"
+
+    def build(root: str):
         final, cents = _fit_train(
             embeddings, k, iters, materialize=False, persist_final=True
         )
-        out = (final, cents)
-        # promote the trained fit to a stored artifact so the NEXT
-        # session opens it instead of retraining (build-once/
-        # query-many; the memory entry keeps this session's plan
-        # reuse).  Storing is an optimization: a failed write
-        # (read-only /tmp, disk pressure) must not fail a query whose
-        # compute succeeded — marker-last means a partial store is
-        # simply ignored.
-        try:
-            _store_fit(
-                embeddings.sparkSession, cache_key, k, iters, final, cents
-            )
-        except Exception:
-            pass
-        _FIT_CACHE[ck] = out
-        return out
+        # the IVFIndex build-once/query-many shape (similarity/
+        # index.py): `centroids` is K rows; `assign` is (vec_id,
+        # cluster, d2) — three longs per corpus row, NOT the vectors
+        TxTable(os.path.join(root, "centroids")).overwrite(
+            spark.createDataFrame(cents, "cent_id long, cv array<long>")
+        )
+        TxTable(os.path.join(root, "assign")).overwrite(final)
+        return final, cents
+
+    def open_(root: str):
+        cents = sorted(
+            (r.cent_id, list(r.cv))
+            for r in TxTable(os.path.join(root, "centroids"))
+            .read(spark)
+            .collect()
+        )
+        final = TxTable(os.path.join(root, "assign")).read(spark)
+        return final.select("vec_id", "cluster", "d2").persist(), cents
+
+    return memo(
+        spark,
+        "kmeans-fit",
+        ident,
+        cache_key,
+        lambda: stored("kmeans-fit", ident, cache_key, build, open_),
+    )
 
 
 def _fit_train(

@@ -152,48 +152,26 @@ def _train_codebooks(
     return books
 
 
-# (application id, caller cache key, trainer tag + params) → trained
-# codebooks (plain nested lists — no executor storage held).  Training
-# is integer-exact and deterministic per corpus stamp, so a cached
-# book list is bit-identical to a fresh one — the same session-cache
-# convention as kmeans._FIT_CACHE, and the steady-state cost the bench
-# protocol documents (a production PQ index trains once and serves
-# many queries; the persisted lifecycle is IVFPQIndex below).
-_BOOK_CACHE: dict[tuple, list] = {}
-
-# (application id, index path, centroids version, books version,
-# caller m_sub/sub_dim) → parsed stored geometry (cell id/centroid
-# arrays + per-subspace codebook matrices, plain numpy — no executor
-# storage held).  The stored artifacts are immutable per TxTable
-# version, so a cached parse is bit-identical to a fresh read; a
-# rebuild overwrites both tables and bumps the versions inside the
-# key (the _PROBE_CACHE convention from similarity/index.py).  Saves
-# two table-read jobs + collects per topk/encode_batch invocation.
-_GEOM_CACHE: dict[tuple, tuple] = {}
-
-
 def _cached_books(
     spark: SparkSession, cache_key: str | None, params: tuple, train
 ):
+    """Trained codebooks (plain nested lists — no executor storage
+    held), memoized per session, corpus path + trainer params and
+    corpus stamp (cache.memo).  Training is integer-exact and
+    deterministic per stamp, so a memoized book list is bit-identical
+    to a fresh one — a production PQ index trains once and serves many
+    queries (the persisted lifecycle is IVFPQIndex below)."""
     if cache_key is None:
         return train()
-    ck = (spark.sparkContext.applicationId, cache_key) + params
-    hit = _BOOK_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    from ..catalog import evict_superseded
+    from ..cache import memo
 
-    real = cache_key.split("|", 1)[0]
-    evict_superseded(
-        _BOOK_CACHE,
-        lambda key: key[0] == ck[0]
-        and key[2:] == ck[2:]
-        and key[1].split("|", 1)[0] == real
-        and key[1] != cache_key,
+    return memo(
+        spark,
+        "pq-books",
+        (cache_key.split("|", 1)[0],) + params,
+        cache_key,
+        train,
     )
-    books = train()
-    _BOOK_CACHE[ck] = books
-    return books
 
 
 def pq_topk(
@@ -211,7 +189,8 @@ def pq_topk(
     squared-L2 distance (quantized integer space).  Returns
     (query_id, vec_id, pq_d2, rnk) — pq_d2 is the exact integer ADC
     sum, reproducible on any engine.  ``cache_key`` (a corpus stamp)
-    session-caches the trained codebooks — kmeans_fit's convention."""
+    memoizes the trained codebooks per session (cache.memo, as
+    kmeans_fit does)."""
     q = quantize(embeddings).persist()  # training collects + LUT
     # collect + final scoring all read it; unpersisted before return
     books = _cached_books(
@@ -667,60 +646,50 @@ class IVFPQIndex:
     ):
         """(m_sub, sub_dim, cell_ids, cell_mat, mats) from storage —
         the shared loader for tick(), encode_batch() and topk().
-        Session-cached per (application, path, stored versions): the
-        artifacts are immutable per version, so repeated queries skip
-        the two table-read jobs (round 11 — the ``_GEOM_CACHE``
-        convention above).  ``m_sub``/``sub_dim`` are the caller's
-        fallback for a pre-meta.json index only; the stored meta
-        overrides them whenever present."""
+        Parsed stored geometry (cell id/centroid arrays + per-subspace
+        codebook matrices, plain numpy — no executor storage held),
+        memoized per session and index path at the stored centroids/
+        books versions (cache.memo): the artifacts are immutable per
+        version, so repeated queries skip the two table-read jobs and
+        a rebuild or tick re-parses.  ``m_sub``/``sub_dim`` are the
+        caller's fallback for a pre-meta.json index only; the stored
+        meta overrides them whenever present."""
         import json
         import os
 
-        key = (
-            spark.sparkContext.applicationId,
-            self.path,
-            self.cent_t.latest_version(),
-            self.books_t.latest_version(),
-            int(m_sub),
-            int(sub_dim),
-        )
-        hit = _GEOM_CACHE.get(key)
-        if hit is not None:
-            return hit
-        from ..catalog import evict_superseded
+        from ..cache import memo
 
-        # evict only entries whose stored VERSIONS differ — an entry at
-        # the same versions with a different m_sub/sub_dim fallback is
-        # live (the stored meta overrides the fallback, so it is the
-        # same geometry), and evicting it would thrash alternating
-        # callers (ADVICE r11)
-        evict_superseded(
-            _GEOM_CACHE,
-            lambda k: k[:2] == key[:2] and k[2:4] != key[2:4],
+        def build():
+            ms, sd = m_sub, sub_dim
+            meta_p = os.path.join(self.path, "meta.json")
+            if os.path.exists(meta_p):
+                with open(meta_p) as f:
+                    meta = json.load(f)
+                ms, sd = meta["m_sub"], meta["sub_dim"]
+            cents = sorted(
+                (r["cent_id"], list(r["cv"]))
+                for r in self.cent_t.read(spark).collect()
+            )
+            cell_ids = np.array([c for c, _cv in cents], dtype="int64")
+            cell_mat = np.array([cv for _c, cv in cents], dtype="int64")
+            books: list[list[tuple[int, list[int]]]] = [
+                [] for _ in range(ms)
+            ]
+            for r in self.books_t.read(spark).collect():
+                books[r["j"]].append((r["cent_id"], list(r["cv"])))
+            mats = [
+                np.array([cv for (_c, cv) in sorted(b)], dtype="int64")
+                for b in books
+            ]
+            return ms, sd, cell_ids, cell_mat, mats
+
+        return memo(
+            spark,
+            "pq-geometry",
+            (self.path, int(m_sub), int(sub_dim)),
+            (self.cent_t.latest_version(), self.books_t.latest_version()),
+            build,
         )
-        meta_p = os.path.join(self.path, "meta.json")
-        if os.path.exists(meta_p):
-            with open(meta_p) as f:
-                meta = json.load(f)
-            m_sub, sub_dim = meta["m_sub"], meta["sub_dim"]
-        cents = sorted(
-            (r["cent_id"], list(r["cv"]))
-            for r in self.cent_t.read(spark).collect()
-        )
-        cell_ids = np.array([c for c, _cv in cents], dtype="int64")
-        cell_mat = np.array([cv for _c, cv in cents], dtype="int64")
-        books: list[list[tuple[int, list[int]]]] = [
-            [] for _ in range(m_sub)
-        ]
-        for r in self.books_t.read(spark).collect():
-            books[r["j"]].append((r["cent_id"], list(r["cv"])))
-        mats = [
-            np.array([cv for (_c, cv) in sorted(b)], dtype="int64")
-            for b in books
-        ]
-        out = (m_sub, sub_dim, cell_ids, cell_mat, mats)
-        _GEOM_CACHE[key] = out
-        return out
 
     def encode_batch(
         self, spark: SparkSession, embeddings: DataFrame
@@ -1167,9 +1136,10 @@ class IVFPQIndex:
         artifacts only — no training, no embedding scan.  Index
         geometry (m_sub/sub_dim) comes from the stored meta.json when
         present — the caller's defaults cannot misparse the books.
-        Artifact reads ride the per-version ``_GEOM_CACHE`` (round 11):
-        a serving session pays the centroid/codebook collect jobs once
-        per stored version, not once per query."""
+        Artifact reads ride the per-version geometry memo
+        (``_stored_geometry``): a serving session pays the centroid/
+        codebook collect jobs once per stored version, not once per
+        query."""
         m_sub, sub_dim, cell_ids, cell_mat, mats = self._stored_geometry(
             spark, m_sub, sub_dim
         )

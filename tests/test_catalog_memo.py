@@ -1,5 +1,6 @@
-"""register_views memo semantics (catalog.py — ADVICE r9 / VERDICT r9
-#5): the memo must be keyed by the SESSION OBJECT, weakly.
+"""register_views memo semantics (catalog.py over cache.memo — ADVICE
+r9 / VERDICT r9 #5): the memo must be keyed by the SESSION OBJECT,
+weakly.
 
 A raw ``id(spark)`` key has two failure modes this file pins shut:
 CPython can reuse an id after the session is garbage-collected
@@ -12,10 +13,11 @@ from __future__ import annotations
 
 import gc
 import os
+import weakref
 
 import pyspark.sql.functions as F
 
-from etl_tpch_spark import catalog
+from etl_tpch_spark import cache
 from etl_tpch_spark.catalog import register_views
 
 
@@ -41,16 +43,18 @@ def test_dead_key_entry_is_dropped():
     retained key's id is never reused — but would make this test
     vacuous if written against a real session."""
 
-    class _K:  # stand-in key; the memo is type-agnostic
+    class _K:  # stand-in session; the memo is type-agnostic
         pass
 
-    before = len(catalog._REGISTERED_VIEWS)
+    before = len(cache._ENTRIES)
     k = _K()
-    catalog._REGISTERED_VIEWS[k] = ("sf", ())
-    assert len(catalog._REGISTERED_VIEWS) == before + 1
+    alive = weakref.ref(k)
+    cache.memo(k, "temp-views", None, ("sf", ()), lambda: None)
+    assert len(cache._ENTRIES) == before + 1
     del k
     gc.collect()
-    assert len(catalog._REGISTERED_VIEWS) == before
+    assert alive() is None  # the memo holds no strong reference
+    assert len(cache._ENTRIES) == before
 
 
 def test_table_appearing_after_first_call_registers(spark, tmp_path):

@@ -32,7 +32,11 @@ def _write_docs(spark, sf_dir, rows):
 def test_lm_cache_evicts_on_fixture_regeneration(spark, tmp_path):
     """_reference_lm keys on the documents table stamp: rewriting the
     parquet at the same path must retrain, not serve the old LM."""
-    from etl_tpch_spark.queries.text import _LM_CACHE, text_lm_quality_filter
+    from etl_tpch_spark.catalog import Tables
+    from etl_tpch_spark.queries.text import (
+        _reference_lm,
+        text_lm_quality_filter,
+    )
 
     sf = str(tmp_path)
     _write_docs(
@@ -48,7 +52,8 @@ def test_lm_cache_evicts_on_fixture_regeneration(spark, tmp_path):
         for r in text_lm_quality_filter(spark, sf).collect()
     }
     assert before[2] > 0  # covered by the src0-trained LM
-    n_keys = len(_LM_CACHE)
+    old_lm = _reference_lm(Tables(spark, sf))
+    assert old_lm.is_cached
     time.sleep(0.01)  # ensure a distinct mtime_ns
     _write_docs(
         spark,
@@ -64,26 +69,28 @@ def test_lm_cache_evicts_on_fixture_regeneration(spark, tmp_path):
     }
     # the reference corpus changed: doc 2's bigrams are now unseen
     assert after[2] == 0, after
-    # the superseded entry was evicted, not accreted
-    assert len(_LM_CACHE) <= n_keys + 1
+    # the superseded entry was evicted (and released), not accreted
+    assert not old_lm.is_cached
+    assert _reference_lm(Tables(spark, sf)) is not old_lm
 
 
 def test_kmeans_fit_cache_evicts_superseded_stamp(spark):
     """A new stamp for the same fixture path replaces (and unpersists)
     the old fit instead of pinning both."""
-    from etl_tpch_spark.similarity.kmeans import _FIT_CACHE, kmeans_fit
+    from etl_tpch_spark.similarity.kmeans import kmeans_fit
 
     rows = [
         (int(i), [float(x) for x in np.eye(8)[i % 4] * (1 + i)])
         for i in range(40)
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kmeans_fit(emb, 4, 1, cache_key="/fix/path|stamp-old")
-    old = [k for k in _FIT_CACHE if k[1] == "/fix/path|stamp-old"]
-    assert old
-    kmeans_fit(emb, 4, 1, cache_key="/fix/path|stamp-new")
-    assert not [k for k in _FIT_CACHE if k[1] == "/fix/path|stamp-old"]
-    assert [k for k in _FIT_CACHE if k[1] == "/fix/path|stamp-new"]
+    old, _ = kmeans_fit(emb, 4, 1, cache_key="/fix/path|stamp-old")
+    assert old.is_cached
+    assert kmeans_fit(emb, 4, 1, cache_key="/fix/path|stamp-old")[0] is old
+    new, _ = kmeans_fit(emb, 4, 1, cache_key="/fix/path|stamp-new")
+    assert not old.is_cached
+    assert new.is_cached
+    assert kmeans_fit(emb, 4, 1, cache_key="/fix/path|stamp-new")[0] is new
 
 
 def test_span_index_refuses_v1_format(spark, tmp_path):
