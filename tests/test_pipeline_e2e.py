@@ -10,10 +10,14 @@ prove idempotence / append semantics.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from datetime import datetime, timedelta
 
+import numpy as np
 import pandas as pd
 import pytest
+from pyspark.errors import AnalysisException
 
 from etl_tpch_spark.pipeline import (
     compact_all,
@@ -23,6 +27,8 @@ from etl_tpch_spark.pipeline import (
     query_reduce,
     unshipped_orders_live,
 )
+from etl_tpch_spark.pipeline.reduce import SEGMENTS
+from etl_tpch_spark.pipeline.workflow import results_ready, run_cycle
 
 from .conftest import TEST_SF_DIR
 
@@ -197,6 +203,163 @@ def test_run_cycle_full_tick(spark, tmp_path_factory):
     # post-ingest expectations ran and the feed is clean
     assert all(passed for _, passed in r2["quality"].values())
     assert "unique:o_orderkey" in r2["quality"]
+
+
+# --- one-pass reduce vs the per-segment query it replaces ---------------
+
+LAKE_TICKS = 3
+LAKE_CUTOFF = NOW + timedelta(minutes=15 * (LAKE_TICKS - 1))
+
+
+@pytest.fixture(scope="module")
+def lake(spark, tmp_path_factory):
+    """A lake grown by ``run_cycle`` over three 15-min ticks; the last
+    tick's reduce leaves gold files (and warms the reduce)."""
+    root = str(tmp_path_factory.mktemp("lake"))
+    for tick in range(LAKE_TICKS):
+        run_cycle(spark, TEST_SF_DIR, root,
+                  now=NOW + timedelta(minutes=15 * tick),
+                  reduce=tick == LAKE_TICKS - 1)
+    return os.path.join(root, "processed")
+
+
+def _load(spark, processed):
+    return [spark.read.parquet(os.path.join(processed, t))
+            for t in ("orders", "lineitem", "customer")]
+
+
+def _reference(tables, seg, cutoff, k):
+    """The per-segment pipeline: one full query per segment."""
+    return unshipped_orders_live(
+        *tables, segment=seg, cutoff=cutoff, k=k
+    ).coalesce(1)
+
+
+def _parts(path):
+    return [f for f in os.listdir(path) if f.endswith(".parquet")]
+
+
+def _assert_same_gold(spark, got_path, want_path):
+    """Same single part file, columns, dtypes, row order and values
+    (revenue to rtol 1e-12)."""
+    assert len(_parts(got_path)) == 1 and len(_parts(want_path)) == 1
+    got, want = spark.read.parquet(got_path), spark.read.parquet(want_path)
+    assert got.dtypes == want.dtypes
+    g, w = got.collect(), want.collect()  # one file: file order
+    assert len(g) == len(w)
+    assert [r.l_orderkey for r in g] == [r.l_orderkey for r in w]
+    np.testing.assert_allclose(
+        [r.revenue for r in g], [r.revenue for r in w], rtol=1e-12
+    )
+    rest = [c for c in got.columns if c != "revenue"]
+    assert [[r[c] for c in rest] for r in g] == [
+        [r[c] for c in rest] for r in w
+    ]
+
+
+@pytest.mark.parametrize(
+    "k, segments, cutoff",
+    [
+        (50, SEGMENTS, LAKE_CUTOFF),
+        (3, SEGMENTS, LAKE_CUTOFF),
+        (5, ("automobile", "Building", "FURNITURE", "household",
+             "machinery"), LAKE_CUTOFF),
+        (50, SEGMENTS, datetime(2000, 1, 1)),  # before every order
+    ],
+    ids=["k50", "k3", "lowercase", "empty"],
+)
+def test_reduce_one_pass_matches_per_segment(
+    spark, lake, tmp_path, k, segments, cutoff
+):
+    """Every gold file equals the per-segment query's own coalesce(1)
+    output on a multi-tick lake — including when every segment is
+    empty, where each still gets one schema-bearing part file."""
+    gold, ref = str(tmp_path / "results"), str(tmp_path / "ref")
+    paths = query_reduce(spark, lake, gold, cutoff=cutoff, k=k,
+                         segments=segments)
+    assert list(paths) == list(segments)  # the caller's spelling
+    tables = _load(spark, lake)
+    rows = 0
+    for seg, path in paths.items():
+        assert path == os.path.join(gold, f"{seg.lower()}.snappy.parquet")
+        want = os.path.join(ref, seg.lower())
+        _reference(tables, seg, cutoff, k).write.parquet(want)
+        _assert_same_gold(spark, path, want)
+        rows += spark.read.parquet(path).count()
+    assert (rows == 0) == (cutoff < NOW)
+    assert results_ready(gold)
+
+
+def _jobs_in_group(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"reduce-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reduce_one_pass_job_shape_and_release(spark, lake, tmp_path):
+    """A warm one-pass reduce runs fewer Spark jobs than the five
+    per-segment pipelines on the same lake, and leaves no persisted
+    RDD behind."""
+    ref = str(tmp_path / "ref")
+
+    def per_segment():
+        tables = _load(spark, lake)
+        for seg in SEGMENTS:
+            _reference(tables, seg, LAKE_CUTOFF, 50).write.mode(
+                "overwrite").parquet(os.path.join(ref, seg.lower()))
+
+    def one_pass():
+        query_reduce(spark, lake, str(tmp_path / "results"),
+                     cutoff=LAKE_CUTOFF)
+
+    per_segment()  # warm both paths
+    one_pass()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    n_one_pass = _jobs_in_group(spark, one_pass)
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+    n_per_segment = _jobs_in_group(spark, per_segment)
+    assert 0 < n_one_pass < n_per_segment
+
+
+def _gold_rows(spark, results):
+    return {
+        seg: [tuple(r) for r in spark.read.parquet(
+            os.path.join(results, f"{seg.lower()}.snappy.parquet")
+        ).collect()]
+        for seg in SEGMENTS
+    }
+
+
+def test_reduce_failure_keeps_previous_gold(spark, tmp_path):
+    """Every segment is ranked before the first gold file is
+    overwritten: a reduce that fails — in the ranking job or at load —
+    leaves all five previous gold files intact."""
+    root = str(tmp_path)
+    run_cycle(spark, TEST_SF_DIR, root, now=NOW, reduce=True, k=5)
+    results = os.path.join(root, "results")
+    lineitem = os.path.join(root, "processed", "lineitem")
+    old = _gold_rows(spark, results)
+    assert all(old.values())
+
+    # a data file vanishes: the load succeeds (the sink's log lists
+    # it), the ranking job fails
+    os.remove(os.path.join(lineitem, sorted(_parts(lineitem))[-1]))
+    with pytest.raises(Exception):
+        query_reduce(spark, os.path.join(root, "processed"), results,
+                     cutoff=NOW, k=5)
+    assert results_ready(results) and _gold_rows(spark, results) == old
+
+    shutil.rmtree(lineitem)
+    with pytest.raises(AnalysisException):
+        query_reduce(spark, os.path.join(root, "processed"), results,
+                     cutoff=NOW, k=5)
+    assert results_ready(results) and _gold_rows(spark, results) == old
 
 
 @pytest.mark.slow
