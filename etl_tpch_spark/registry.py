@@ -136,82 +136,95 @@ _QUERY_MODULES = (
 # rows behind them — the steady ~3.5-round cycle the invariant test
 # enforces).
 #
-# QUEUED ROUND-12 WINDOW CORE (the invariant test goes red at r13 if
-# the 25 remaining r8 rows miss the r12 window): sample_uniform_topk,
-# scalar_datetime_functions, serving_top_orders_display, setop_except,
-# sim_ann_topk_bruteforce, sim_ann_topk_lsh, sim_contrastive_negatives,
-# sim_cosine_pairs, sim_cosine_pairs_blocked, text_bm25_topk,
-# text_chunking, text_fingerprint, text_lang_id, text_quality_score,
-# text_span_dedup_clean, text_span_dedup_stats, text_stats,
-# text_term_sketch_topk, text_token_counts, text_top_terms_per_lang,
-# topk_per_segment_window, ts_locf_hourly, ts_moving_window_range,
-# udtf_tokenize_positions, window_lag_lead — plus whatever r12 itself
-# changes, rest from the 48-row r9 set (oldest certification,
-# alphabetical fill: agg_argmax, agg_hll_distinct_customers,
-# agg_mode_per_group, agg_rollup, agg_salted_flag_totals,
-# agg_unpivot_metrics, corpus_curation, curation_model_filter,
-# dedup_cluster_stats, dedup_incremental, events_map_type,
-# events_markov_transitions, events_session_window,
-# flagship_all_segments_union, flagship_unshipped_orders,
-# inference_batch_scores, inference_gbtree_scores, join_asof_purchases,
-# join_bloom_semi_orders_unbounded, multimodal_byte_histogram,
-# multimodal_decode_lengths, multimodal_feature_extract,
-# multimodal_frame_sample, multimodal_resize, profile_orders_columns).
+# ROUND 13: round 12 re-checked the round-11 window unchanged, so the
+# 25 rows last green in r8 would be 5 rounds stale at r13 and the
+# staleness invariant went red.  This round takes exactly the queued
+# r8 + r9 core: the 25 r8 rows first, then the first 25 r9 rows
+# alphabetically.  That fill includes `flagship_unshipped_orders` and
+# `flagship_all_segments_union`, the registered forms of the query that
+# pipeline/reduce.py answers; the reduce was rewritten as a one-pass
+# five-segment ranking after their last check (queries/flagship.py
+# itself is unchanged).  No query is never-certified, so nothing leads
+# for that convention.  After a green r13 the floor moves to r9 (23
+# rows left).
+#
+# QUEUED ROUND-14 WINDOW CORE (the invariant test goes red at r14 if
+# the 23 remaining r9 rows miss the r14 window): q11_important_stock,
+# q1_pricing_summary, q20_promo_part_suppliers, q21_waiting_orders,
+# q2_min_cost_supplier, q9_product_type_profit, quality_expectations,
+# sample_temperature_mixture, search_hybrid_rrf, sim_ann_topk_ivfpq,
+# sim_ann_topk_pq, text_boilerplate_ngrams, text_bpe_merges,
+# text_bpe_segment, text_bpe_token_counts, text_decontaminate_ngrams,
+# text_lm_perplexity_buckets, text_repetition_filter,
+# text_token_counts_arrow, ts_gapfill_hourly, udaf_grouped_price_stats,
+# window_distribution, window_ntile_quartiles — plus whatever r14
+# itself changes, rest from the 50-row r10 set (oldest certification,
+# alphabetical fill: agg_cube, agg_grouping_sets, agg_histogram,
+# agg_percentiles, agg_pivot, catalog_list_tables,
+# dedup_embedding_clusters, dedup_exact, dedup_minhash_lsh,
+# dedup_ngram_jaccard, dedup_simhash, events_cohort_retention,
+# events_funnel, events_variant_extract, graph_kcore, graph_pagerank,
+# join_full_outer_nation_activity, join_range_clicks_before_error,
+# multimodal_audio_fingerprint, multimodal_near_dup_incremental,
+# multimodal_near_dup_pairs, multimodal_video_near_dup,
+# search_hybrid_rrf_indexed, sim_ann_topk_ivf_indexed,
+# sim_ann_topk_ivfpq_indexed, sim_ann_topk_lsh_multiprobe,
+# sim_ann_topk_matryoshka).
 DRIVER_WINDOW = (
-    # ---- never-certified first (round-11 addition)
-    "events_variant_stored",
-    # ---- backlog: last green in ROUND 7 (the queued 26)
-    "q10_returned_items",
-    "q12_priority_shipping",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_brand_type_counts",
-    "q17_small_quantity_orders",
-    "q19_disjunctive_filter",
-    "q22_sales_opportunity",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "scalar_conditional_functions",
-    "scalar_string_functions",
-    "setop_intersect",
-    "setop_union_distinct",
-    "sim_ann_topk_ivf",
-    "sim_cosine_pairs_cells",
-    "sim_kmeans_clusters",
-    "sim_quantized_cosine_pairs_cells",
-    "text_bigram_lm",
-    "text_bigram_lm_indexed",
-    "text_lm_quality_filter",
-    "window_running_total",
-    # ---- backlog: last green in ROUND 8 — alphabetical fill
-    "agg_count_distinct",
-    "corpus_report_card",
-    "dedup_canonical_documents",
-    "dedup_clusters",
-    "dedup_cross_source_matrix",
-    "dedup_embedding_clusters_bruteforce",
-    "dedup_fingerprint",
-    "events_anomaly_zscore",
-    "events_hll_daily_users",
-    "events_hll_overlap",
-    "events_json_extract",
-    "events_json_typed",
-    "events_rolling_active_users",
-    "events_sliding_window",
-    "events_tumbling_window",
-    "events_type_share_by_day",
-    "graph_degree_distribution",
-    "graph_triangle_count",
-    "join_bloom_semi_orders",
-    "q18_large_orders",
-    "sample_hash_split",
-    "sample_quality_weighted",
-    "sample_stratified",
+    # ---- backlog: last green in ROUND 8 (the queued 25)
+    "sample_uniform_topk",
+    "scalar_datetime_functions",
+    "serving_top_orders_display",
+    "setop_except",
+    "sim_ann_topk_bruteforce",
+    "sim_ann_topk_lsh",
+    "sim_contrastive_negatives",
+    "sim_cosine_pairs",
+    "sim_cosine_pairs_blocked",
+    "text_bm25_topk",
+    "text_chunking",
+    "text_fingerprint",
+    "text_lang_id",
+    "text_quality_score",
+    "text_span_dedup_clean",
+    "text_span_dedup_stats",
+    "text_stats",
+    "text_term_sketch_topk",
+    "text_token_counts",
+    "text_top_terms_per_lang",
+    "topk_per_segment_window",
+    "ts_locf_hourly",
+    "ts_moving_window_range",
+    "udtf_tokenize_positions",
+    "window_lag_lead",
+    # ---- backlog: last green in ROUND 9 — alphabetical fill
+    "agg_argmax",
+    "agg_hll_distinct_customers",
+    "agg_mode_per_group",
+    "agg_rollup",
+    "agg_salted_flag_totals",
+    "agg_unpivot_metrics",
+    "corpus_curation",
+    "curation_model_filter",
+    "dedup_cluster_stats",
+    "dedup_incremental",
+    "events_map_type",
+    "events_markov_transitions",
+    "events_session_window",
+    "flagship_all_segments_union",
+    "flagship_unshipped_orders",
+    "inference_batch_scores",
+    "inference_gbtree_scores",
+    "join_asof_purchases",
+    "join_bloom_semi_orders_unbounded",
+    "multimodal_byte_histogram",
+    "multimodal_decode_lengths",
+    "multimodal_feature_extract",
+    "multimodal_frame_sample",
+    "multimodal_resize",
+    "profile_orders_columns",
 )
+
 
 _loaded = False
 
