@@ -111,8 +111,9 @@ def flagship_all_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch ordering (revenue desc, orderkey) takes each segment's top
     k.  Exactly the union of the five branches: an order belongs to
     one customer hence one segment, so every (segment, order) group
-    holds precisely the branch's rows.  (Literal loop form preserved
-    in pipeline/reduce.py.)"""
+    holds precisely the branch's rows.  pipeline/reduce.py
+    ``query_reduce`` ranks the live tables in the same one pass before
+    it writes the five gold files."""
     t = Tables(spark, sf_dir)
     cut = F.lit(CUTOFF).cast("timestamp")
     fcust = t.customer.filter(

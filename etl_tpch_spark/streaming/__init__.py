@@ -14,10 +14,13 @@ T1-T6).  Spark replaces that machinery natively:
 - ``streaming.stateful`` — custom per-key state machines via
   ``applyInPandasWithState`` (the operator class the reference cannot
   express at all).
+- ``streaming.ticks`` — the exactly-once index-tick drain.  The crawl
+  doc drain of pipeline/daily.py ``crawl_day_tick`` is its one
+  document caller (default-gate coverage: tests/test_crawl_drain.py);
+  ``streaming.hll_index`` and ``streaming.ivf_index`` drain event and
+  vector files through it.
 """
 
-from .dedup_index import accumulated_pairs, stream_dedup_ticks
-from .corpus import stream_corpus_ticks
 from .hll_index import stream_hll_ticks
 from .ingest import stream_ingest_all, stream_ingest_table
 from .joins import stream_orders_lineitem_join
@@ -38,8 +41,5 @@ __all__ = [
     "sliding_window_avg",
     "session_window_stats",
     "running_user_stats",
-    "stream_dedup_ticks",
-    "accumulated_pairs",
     "stream_hll_ticks",
-    "stream_corpus_ticks",
 ]

@@ -3,14 +3,15 @@ register index exactly-once per micro-batch.
 
 The batch side (pipeline/hll_index.py) made the running per-day
 distinct-user estimate O(new batch) per tick; this module is its
-operating mode, the same shape as the streaming dedup ticks
-(streaming/dedup_index.py): events land as files, a checkpointed
-Structured Streaming source discovers them, and ``foreachBatch``
-folds each micro-batch's register maxima into the index TxTable with
-an epoch-keyed batch id — a replayed epoch (the classic foreachBatch
-replay window) appends nothing, and because register folding is
-idempotent (max), even a *logical* duplicate batch leaves every
-estimate unchanged.
+operating mode, on the same tick protocol (streaming/ticks.py) as
+the crawl doc drain in pipeline/daily.py crawl_day_tick (default-gate
+coverage: tests/test_crawl_drain.py): events land as files, a
+checkpointed Structured Streaming source discovers them, and
+``foreachBatch`` folds each micro-batch's register maxima into the
+index TxTable with an epoch-keyed batch id — a replayed epoch (the
+classic foreachBatch replay window) appends nothing, and because
+register folding is idempotent (max), even a *logical* duplicate
+batch leaves every estimate unchanged.
 
 The live dashboard number then comes from ``HllIndex.estimate`` —
 stored registers only, never a rescan of historical events.  At
@@ -46,7 +47,6 @@ def stream_hll_ticks(
     *,
     schema: T.StructType = EVENT_SCHEMA,
     max_files_per_trigger: int | None = None,
-    await_termination: bool = True,
     fold_over_files: int | None = 64,
 ) -> StreamingQuery:
     """Drain staged event files (JSON-lines of event_id/ts/user_id)
@@ -56,20 +56,13 @@ def stream_hll_ticks(
     exceeds this many files, ``fold()`` rewrites accumulated tick rows
     into one row per (day, register) — the sketch-aware OPTIMIZE
     (estimates unchanged; the table stops growing with tick count).
-    None disables.  Requires ``await_termination``."""
+    None disables."""
     idx = HllIndex(index_path)
 
     def tick(batch: DataFrame, bid: str) -> None:
         idx.tick(batch, batch_id=bid)
 
-    def maybe_fold() -> None:
-        if (
-            fold_over_files
-            and len(idx.table.snapshot_files()) > fold_over_files
-        ):
-            idx.fold(spark)
-
-    return stream_doc_ticks(
+    q = stream_doc_ticks(
         spark,
         events_dir,
         checkpoint_dir,
@@ -77,6 +70,7 @@ def stream_hll_ticks(
         schema=schema,
         id_col="event_id",
         max_files_per_trigger=max_files_per_trigger,
-        await_termination=await_termination,
-        after_drain=maybe_fold,
     )
+    if fold_over_files and len(idx.table.snapshot_files()) > fold_over_files:
+        idx.fold(spark)
+    return q

@@ -46,7 +46,6 @@ def stream_ivf_ticks(
     *,
     schema: T.StructType = VECTOR_SCHEMA,
     max_files_per_trigger: int | None = None,
-    await_termination: bool = True,
     compact_over_files: int | None = 64,
 ) -> StreamingQuery:
     """Drain staged vector files (JSON-lines of vec_id/embedding)
@@ -54,22 +53,13 @@ def stream_ivf_ticks(
     The index must already be built (stored centroids are the
     assignment rule); ``compact_over_files`` re-clusters the inverted
     file by cell once its snapshot exceeds that many files (None
-    disables; requires ``await_termination``)."""
+    disables)."""
     idx = IVFIndex(index_path)
 
     def tick(batch: DataFrame, bid: str) -> None:
         idx.tick(batch.sparkSession, batch, batch_id=bid)
 
-    def maybe_compact() -> None:
-        if (
-            compact_over_files
-            and len(idx.cells_t.snapshot_files()) > compact_over_files
-        ):
-            idx.cells_t.compact(
-                spark, target_files=8, cluster_by=("cell",)
-            )
-
-    return stream_doc_ticks(
+    q = stream_doc_ticks(
         spark,
         vectors_dir,
         checkpoint_dir,
@@ -77,6 +67,10 @@ def stream_ivf_ticks(
         schema=schema,
         id_col="vec_id",
         max_files_per_trigger=max_files_per_trigger,
-        await_termination=await_termination,
-        after_drain=maybe_compact,
     )
+    if (
+        compact_over_files
+        and len(idx.cells_t.snapshot_files()) > compact_over_files
+    ):
+        idx.cells_t.compact(spark, target_files=8, cluster_by=("cell",))
+    return q

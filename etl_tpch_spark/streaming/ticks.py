@@ -1,15 +1,17 @@
-"""Shared driver for index-tick streams: staged crawl files drain
-through a checkpointed AvailableNow file stream, one exactly-once tick
-per micro-batch.
+"""The shared drain of index-tick streams: staged files drain through a
+checkpointed AvailableNow file stream, one exactly-once tick per
+micro-batch.
 
-Both daily-crawl index streams (streaming/dedup_index.py minhash
-signatures, streaming/span_index.py window hashes) are the same
-protocol — file-source checkpoint + content-derived epoch batch ids
-(streaming/batchid.py) + post-drain index compaction — differing only
-in what a tick does.  Keeping the protocol in ONE place means a fix to
-the replay/compaction contract lands everywhere at once (this repo has
-already shipped two such hardening sweeps; each had to touch every
-copy)."""
+Three drains ride it: the crawl doc drain of pipeline/daily.py
+``crawl_day_tick`` (corpus cycle, span, LM, search and classifier
+stages under one batch id; default-gate coverage in
+tests/test_crawl_drain.py), the HLL event drain
+(streaming/hll_index.py) and the IVF vector drain
+(streaming/ivf_index.py).  The protocol — file-source checkpoint +
+content-derived epoch batch ids (streaming/batchid.py) — lives in ONE
+place, so a fix to the replay contract lands in every drain at once.
+The drain returns only when it has finished, so each caller runs its
+index maintenance (compaction, fold) right after the call."""
 
 from __future__ import annotations
 
@@ -22,10 +24,14 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .batchid import batch_content_id
 
-DOC_SCHEMA = T.StructType(
+# the staged crawl document: what the crawler writes and every stage
+# of the doc drain reads
+CRAWL_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
         T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+        T.StructField("source", T.StringType()),
     ]
 )
 
@@ -36,19 +42,16 @@ def stream_doc_ticks(
     checkpoint_dir: str,
     tick: Callable[[DataFrame, str], None],
     *,
-    schema: T.StructType = DOC_SCHEMA,
+    schema: T.StructType,
     id_col: str = "doc_id",
     max_files_per_trigger: int | None = None,
-    await_termination: bool = True,
-    after_drain: Callable[[], None] | None = None,
 ) -> StreamingQuery:
-    """Drain staged crawl files (JSON-lines matching ``schema``) and
-    call ``tick(batch, batch_id)`` once per micro-batch, with
+    """Drain staged files (JSON-lines matching ``schema``) and call
+    ``tick(batch, batch_id)`` once per micro-batch, with
     ``batch_id = f"{checkpoint_name}-{epoch}-{content_fingerprint}"``
     (fingerprint over ``id_col``) — idempotent against both the
     foreachBatch replay window AND a wiped checkpoint over re-bundled
-    files.  ``after_drain`` (e.g. index compaction) runs once the
-    drain finishes; requires ``await_termination``."""
+    files.  Returns the query once the drain has finished."""
     ckpt_name = os.path.basename(os.path.normpath(checkpoint_dir))
 
     def run(batch: DataFrame, epoch_id: int) -> None:
@@ -72,8 +75,5 @@ def stream_doc_ticks(
         .trigger(availableNow=True)
         .start()
     )
-    if await_termination:
-        q.awaitTermination()
-        if after_drain is not None:
-            after_drain()
+    q.awaitTermination()
     return q

@@ -3,17 +3,18 @@ cadence call per simulated day drives crawl ingest → minhash dedup +
 span-index + LM-scoring ticks (one shared checkpoint/batch id) → HLL
 event ticks → corpus append → export, with per-day wall time recorded.
 
-The four index suites are e2e-tested separately; what THIS file pins
-is the composition: exactly-once is shared across stages, every store
-accumulates exactly its per-suite result, and the per-day cost stays
-bounded as the corpus grows (the 10× flatness measurement lives in
+What THIS file pins is the whole cadence over three days: exactly-once
+is shared across stages (HLL events included), export and retention
+run, the drift gate retrains, and the per-day cost stays bounded as
+the corpus grows (the 10× flatness measurement lives in
 tools/bench_daily_tick.py → SCALING.md).
 
 Slow tier (VERDICT r7 #5): the multi-day fixture is inherently
 expensive (three full cadence days before any assertion); the module
-runs under --run-slow, while single-tick composition coverage stays
-in the default gate via test_pipeline_e2e.py::test_run_cycle_full_tick
-and the per-index tick suites."""
+runs under --run-slow.  The doc drain's default-gate coverage is
+tests/test_crawl_drain.py: two staged days, each stage's store equal
+to its batch definition, replays on the same checkpoint (or a wiped
+one over the same files) advancing nothing."""
 
 from __future__ import annotations
 
