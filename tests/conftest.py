@@ -79,3 +79,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return TEST_SF_DIR
+
+
+@pytest.fixture(scope="session")
+def crawl_lake(spark, sf_dir, tmp_path_factory):
+    """Days 0 and 1 (doc_id % 3) drained by two crawl_day_tick calls
+    on one lake (tests/crawl_lake.py); day 2 is left for
+    test_crawl_drain's wiped-checkpoint test, which mutates the lake
+    and so requests ``crawl_replay`` first."""
+    from .crawl_lake import build_lake
+
+    return build_lake(spark, sf_dir, tmp_path_factory.mktemp("drain"))
+
+
+@pytest.fixture(scope="session")
+def crawl_replay(spark, crawl_lake):
+    """Store states around a same-checkpoint re-run and a wiped
+    checkpoint's re-drain of day 0 (tests/crawl_lake.py ``replay``)."""
+    from .crawl_lake import replay
+
+    return replay(spark, crawl_lake)

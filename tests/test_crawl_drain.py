@@ -12,13 +12,16 @@ definition.
   weights;
 - the corpus equals manual ``corpus_cycle`` ticks.
 
-Both days run with ``compact_over_files=1``, so every equality above
-holds after the maintenance pass has rewritten the stores, and the
-second day ticked against the compacted indexes.  The last
-two tests pin exactly-once: a re-run on the same checkpoint and a
-wiped checkpoint advance no store version, and a file staged before a
-wiped checkpoint's re-drain lands exactly its new docs.  They mutate
-the shared lake, so they run last (file order).
+The lake is the session's ``crawl_lake`` (tests/crawl_lake.py).  Both
+days run with ``compact_over_files=1``, so every equality above holds
+after the maintenance pass has rewritten the stores, and the second
+day ticked against the compacted indexes.  The last two tests pin
+exactly-once: a re-run on the same checkpoint and a wiped checkpoint
+advance no store version (``crawl_replay``, whose per-store checks are
+in the test_streaming_* modules), and a file staged before a wiped
+checkpoint's re-drain lands exactly its new docs.  That last test
+mutates the shared lake, so it requests ``crawl_replay`` first and
+runs last (file order).
 
 The multi-day composition (HLL events, export, retention, drift
 retrain, day-over-day wall) is the slow tier in test_daily_tick.py."""
@@ -28,28 +31,11 @@ from __future__ import annotations
 import os
 import shutil
 
-import pytest
-from pyspark.sql import functions as F
-
-from etl_tpch_spark.catalog import load_table
 from etl_tpch_spark.pipeline.corpus import corpus_cycle
-from etl_tpch_spark.pipeline.daily import (
-    crawl_day_tick,
-    ensure_quality_classifier,
-    ensure_reference_lm,
-)
+from etl_tpch_spark.pipeline.daily import crawl_day_tick
 from etl_tpch_spark.pipeline.txlog import TxTable
-from etl_tpch_spark.queries.text import _LM_REF_SOURCE
-from etl_tpch_spark.streaming.ticks import CRAWL_SCHEMA
 
-COLS = CRAWL_SCHEMA.fieldNames()
-# every store the doc drain writes, plus the two it only reads (the
-# LM and the classifier weights: ticks never write them)
-STORES = (
-    "corpus", "dedup_index", "spans", "span_index", "scores", "lm",
-    "search_index/postings", "search_index/doclens", "clf_scores",
-    "quality_clf",
-)
+from .crawl_lake import COLS, corpus_rows, stage
 
 
 class _T:  # Tables-shaped shim for _duplicate_spans over a subset
@@ -57,71 +43,20 @@ class _T:  # Tables-shaped shim for _duplicate_spans over a subset
         self.documents = docs
 
 
-def _stage(docs, crawl_dir: str, day: int) -> None:
-    docs.select(*COLS).coalesce(1).write.mode("overwrite").json(
-        os.path.join(crawl_dir, f"day{day}.json")
-    )
-
-
-def _versions(root: str) -> dict[str, int | None]:
-    return {
-        n: TxTable(os.path.join(root, n)).latest_version() for n in STORES
-    }
-
-
-def _corpus_rows(root: str, spark) -> list[tuple]:
-    return sorted(
-        (r["doc_id"], r["split"])
-        for r in TxTable(os.path.join(root, "corpus"))
-        .read(spark)
-        .select("doc_id", "split")
-        .collect()
-    )
-
-
-@pytest.fixture(scope="module")
-def lake(spark, sf_dir, tmp_path_factory):
-    """Days 0 and 1 (doc_id % 3) drained by two crawl_day_tick calls
-    on one lake; day 2 is left for the wiped-checkpoint test.  The
-    manual root holds the same days as plain corpus_cycle ticks."""
-    docs = load_table(spark, sf_dir, "documents")
-    days = [docs.filter(F.col("doc_id") % 3 == d) for d in range(3)]
-    base = tmp_path_factory.mktemp("drain")
-    root, manual = str(base / "lake"), str(base / "manual")
-    ensure_reference_lm(
-        spark, docs.filter(F.col("source") == _LM_REF_SOURCE), root
-    )
-    ensure_quality_classifier(spark, docs, root)
-    outs = []
-    for d in (0, 1):
-        crawl = str(base / "crawl" / f"d{d}")
-        _stage(days[d], crawl, d)
-        outs.append(
-            crawl_day_tick(spark, crawl, root, compact_over_files=1)
-        )
-        corpus_cycle(
-            spark, days[d].select(*COLS), manual, batch_id=f"day-{d}"
-        )
-    return {
-        "root": root, "manual": manual, "base": base, "days": days,
-        "staged": docs.filter(F.col("doc_id") % 3 < 2), "outs": outs,
-    }
-
-
-def test_each_day_ticked_and_maintenance_compacted(lake):
+def test_each_day_ticked_and_maintenance_compacted(crawl_lake):
     """One micro-batch per staged day, and the maintenance pass really
     rewrote the stores (so the equalities below hold after it).  The
     span index stays under compaction's target file count at this
     scale, so its compaction keeps the files as they are."""
-    root = lake["root"]
-    assert [len(o["cycles"]) for o in lake["outs"]] == [1, 1]
+    root = crawl_lake["root"]
+    assert [len(o["cycles"]) for o in crawl_lake["outs"]] == [1, 1]
     for n in ("corpus", "dedup_index", "search_index/postings"):
         t = TxTable(os.path.join(root, n))
         ops = [t.commit_entry(v)["op"] for v in t.versions()]
         assert "compact" in ops, (n, ops)
 
 
-def test_spans_follow_prefix_batch_semantics(spark, lake):
+def test_spans_follow_prefix_batch_semantics(spark, crawl_lake):
     """Day d's span rows equal the batch operator over days 0..d,
     restricted to day d's docs."""
     from etl_tpch_spark.queries.text import _duplicate_spans
@@ -132,16 +67,17 @@ def test_spans_follow_prefix_batch_semantics(spark, lake):
             for r in df.collect()
         }
 
-    got = span_set(TxTable(os.path.join(lake["root"], "spans")).read(spark))
-    day0 = span_set(_duplicate_spans(_T(lake["days"][0])))
-    both = span_set(_duplicate_spans(_T(lake["staged"])))
+    spans = TxTable(os.path.join(crawl_lake["root"], "spans"))
+    got = span_set(spans.read(spark))
+    day0 = span_set(_duplicate_spans(_T(crawl_lake["days"][0])))
+    both = span_set(_duplicate_spans(_T(crawl_lake["staged"])))
     want = {s for s in day0 if s[0] % 3 == 0}
     want |= {s for s in both if s[0] % 3 == 1}
     assert got == want
     assert {s[0] % 3 for s in got} == {0, 1}  # spans on both days
 
 
-def test_lm_scores_equal_batch_scoring(spark, lake):
+def test_lm_scores_equal_batch_scoring(spark, crawl_lake):
     from etl_tpch_spark.pipeline.lm_index import LmIndex
 
     def rows(df):
@@ -150,15 +86,15 @@ def test_lm_scores_equal_batch_scoring(spark, lake):
             for r in df.collect()
         }
 
-    root = lake["root"]
-    staged = lake["staged"]
+    root = crawl_lake["root"]
+    staged = crawl_lake["staged"]
     got = TxTable(os.path.join(root, "scores")).read(spark)
     want = LmIndex(os.path.join(root, "lm")).score(spark, staged)
     assert got.count() == want.count()
     assert rows(got) == rows(want) and rows(got)
 
 
-def test_search_index_answers_like_one_shot_build(spark, lake):
+def test_search_index_answers_like_one_shot_build(spark, crawl_lake):
     from etl_tpch_spark.pipeline.search_index import SearchIndex
     from etl_tpch_spark.queries.text import _BM25_TERMS, _BM25_TOPK
 
@@ -166,22 +102,22 @@ def test_search_index_answers_like_one_shot_build(spark, lake):
         hits = idx.search(spark, _BM25_TERMS, _BM25_TOPK)
         return [tuple(r) for r in hits.collect()]
 
-    staged = lake["staged"]
-    clean = SearchIndex(str(lake["base"] / "one_shot"))
+    staged = crawl_lake["staged"]
+    clean = SearchIndex(str(crawl_lake["base"] / "one_shot"))
     clean.ingest(staged, batch_id="one-shot")
-    drained = SearchIndex(os.path.join(lake["root"], "search_index"))
+    drained = SearchIndex(os.path.join(crawl_lake["root"], "search_index"))
     assert top(drained) == top(clean) and top(clean)
 
 
-def test_clf_scores_equal_stored_weight_scoring(spark, lake):
+def test_clf_scores_equal_stored_weight_scoring(spark, crawl_lake):
     from etl_tpch_spark.pipeline.quality_clf import (
         QualityClfIndex,
         doc_features,
         score_with_weights,
     )
 
-    root = lake["root"]
-    staged = lake["staged"]
+    root = crawl_lake["root"]
+    staged = crawl_lake["staged"]
     got = TxTable(os.path.join(root, "clf_scores")).read(spark)
     assert got.count() == staged.count()
     idx = QualityClfIndex(os.path.join(root, "quality_clf"))
@@ -194,39 +130,39 @@ def test_clf_scores_equal_stored_weight_scoring(spark, lake):
     assert {r["doc_id"]: r["score_q"] for r in got.collect()} == want
 
 
-def test_corpus_equals_manual_cycle_ticks(spark, lake):
-    got = _corpus_rows(lake["root"], spark)
-    assert got == _corpus_rows(lake["manual"], spark) and got
-    assert all(c["n_appended"] > 0 for o in lake["outs"] for c in o["cycles"])
+def test_corpus_equals_manual_cycle_ticks(spark, crawl_lake):
+    got = corpus_rows(crawl_lake["root"], spark)
+    assert got == corpus_rows(crawl_lake["manual"], spark) and got
+    assert all(
+        c["n_appended"] > 0 for o in crawl_lake["outs"] for c in o["cycles"]
+    )
 
 
-def test_rerun_and_wiped_checkpoint_advance_no_version(spark, lake):
-    """Exactly-once across restarts.  The same checkpoint knows day 1
-    is consumed: nothing drains.  A wiped checkpoint re-drains day 0 as
-    epoch 0 with the same content, so its batch id is the one every
-    store already recorded (the foreachBatch replay window)."""
-    root, base = lake["root"], lake["base"]
-    before = _versions(root)
-    out = crawl_day_tick(spark, str(base / "crawl" / "d1"), root)
-    assert out["cycles"] == []
-    assert _versions(root) == before
-
-    shutil.rmtree(os.path.join(root, "checkpoints", "docs"))
-    out = crawl_day_tick(spark, str(base / "crawl" / "d0"), root)
-    assert len(out["cycles"]) == 1
-    assert _versions(root) == before
+def test_rerun_and_wiped_checkpoint_advance_no_version(crawl_replay):
+    """Exactly-once across restarts, over all ten stores: the re-run
+    on the same checkpoint drains nothing, the wiped checkpoint's
+    re-drain of day 0 is one micro-batch under the batch id every
+    store already recorded."""
+    before = crawl_replay["before"]["versions"]
+    assert crawl_replay["rerun"]["cycles"] == []
+    assert crawl_replay["after_rerun"]["versions"] == before
+    assert len(crawl_replay["wiped"]["cycles"]) == 1
+    assert crawl_replay["after_wiped"]["versions"] == before
 
 
-def test_wiped_checkpoint_lands_exactly_new_docs(spark, lake):
+def test_wiped_checkpoint_lands_exactly_new_docs(
+    spark, crawl_lake, crawl_replay
+):
     """A checkpoint lost after a new file was staged: the restarted
     drain's epoch 0 re-bundles old and new docs under a new content
     id.  The corpus drops the old ids up front and gains exactly what
     a manual tick of the new day gains."""
-    root, base, manual = lake["root"], lake["base"], lake["manual"]
-    d2 = lake["days"][2]
-    seen = [i for i, _ in _corpus_rows(root, spark) if i % 3 == 0]
+    root, base = crawl_lake["root"], crawl_lake["base"]
+    manual = crawl_lake["manual"]
+    d2 = crawl_lake["days"][2]
+    seen = [i for i, _ in corpus_rows(root, spark) if i % 3 == 0]
     crawl = str(base / "crawl" / "d0")
-    _stage(d2, crawl, 2)
+    stage(d2, crawl, 2)
     shutil.rmtree(os.path.join(root, "checkpoints", "docs"))
     out = crawl_day_tick(spark, crawl, root)
 
@@ -234,6 +170,6 @@ def test_wiped_checkpoint_lands_exactly_new_docs(spark, lake):
     (cycle,) = out["cycles"]
     assert cycle["n_seen_dropped"] == len(seen) > 0
     assert cycle["n_appended"] == want["n_appended"] > 0
-    got = _corpus_rows(root, spark)
-    assert got == _corpus_rows(manual, spark)
+    got = corpus_rows(root, spark)
+    assert got == corpus_rows(manual, spark)
     assert len(got) == len({doc_id for doc_id, _ in got})

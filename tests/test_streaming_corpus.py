@@ -1,120 +1,25 @@
-"""Streaming corpus curation (streaming/corpus.py): crawl files →
-checkpointed stream → one corpus_cycle tick per micro-batch; the
-drained corpus equals the manually-ticked one, replays mutate
-nothing."""
+"""Streamed corpus curation through the crawl drain (pipeline/daily.py
+crawl_day_tick): crawl files → checkpointed stream → one corpus_cycle
+tick per micro-batch; replays mutate nothing.  The drained corpus
+equals manual ticks in test_crawl_drain.py."""
 
 from __future__ import annotations
 
-import pytest
 
-import os
-
-from pyspark.sql import functions as F
-
-from etl_tpch_spark.catalog import load_table
-from etl_tpch_spark.pipeline.corpus import corpus_cycle, corpus_snapshot
-from etl_tpch_spark.pipeline.txlog import TxTable
-from etl_tpch_spark.streaming.corpus import stream_corpus_ticks
-
-COLS = ("doc_id", "text", "lang", "source")
-
-
-def _stage(spark, docs, crawl_dir: str, day: int) -> None:
-    docs.select(*COLS).coalesce(1).write.mode("overwrite").json(
-        os.path.join(crawl_dir, f"day{day}.json")
-    )
-
-
-def _days(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    ids = sorted(r[0] for r in docs.select("doc_id").collect())
-    cut = ids[len(ids) // 2]
-    return (
-        docs.filter(F.col("doc_id") < cut),
-        docs.filter(F.col("doc_id") >= cut),
-    )
-
-
-@pytest.mark.slow
-def test_streamed_corpus_equals_manual_ticks(spark, sf_dir, tmp_path):
-    d1, d2 = _days(spark, sf_dir)
-    crawl = str(tmp_path / "crawl")
-    s_root = str(tmp_path / "stream_root")
-    m_root = str(tmp_path / "manual_root")
-    ckpt = str(tmp_path / "ckpt")
-
-    _stage(spark, d1, crawl, 1)
-    sums: list = []
-    stream_corpus_ticks(spark, crawl, s_root, ckpt, summaries=sums)
-    _stage(spark, d2, crawl, 2)
-    stream_corpus_ticks(spark, crawl, s_root, ckpt, summaries=sums)
-
-    corpus_cycle(spark, d1.select(*COLS), m_root, batch_id="day-1")
-    corpus_cycle(spark, d2.select(*COLS), m_root, batch_id="day-2")
-
-    got = sorted(
-        (r["doc_id"], r["split"])
-        for r in corpus_snapshot(spark, s_root)
-        .select("doc_id", "split")
-        .collect()
-    )
-    want = sorted(
-        (r["doc_id"], r["split"])
-        for r in corpus_snapshot(spark, m_root)
-        .select("doc_id", "split")
-        .collect()
-    )
-    assert got == want and got
-    assert len(sums) == 2 and all(s["n_appended"] > 0 for s in sums)
-
-
-def test_streamed_corpus_replay_is_noop(spark, sf_dir, tmp_path):
-    d1, _ = _days(spark, sf_dir)
-    crawl = str(tmp_path / "crawl")
-    root = str(tmp_path / "root")
-    ckpt = str(tmp_path / "ckpt")
-    _stage(spark, d1, crawl, 1)
-    stream_corpus_ticks(spark, crawl, root, ckpt)
-    corpus = TxTable(os.path.join(root, "corpus"))
-    v = corpus.latest_version()
-    n = corpus_snapshot(spark, root).count()
-
+def test_streamed_corpus_replay_is_noop(crawl_lake, crawl_replay):
+    before = crawl_replay["before"]
+    assert before["corpus"]
     # checkpoint no-op
-    stream_corpus_ticks(spark, crawl, root, ckpt)
-    assert corpus.latest_version() == v
+    assert crawl_replay["rerun"]["cycles"] == []
+    after = crawl_replay["after_rerun"]
+    assert after["versions"]["corpus"] == before["versions"]["corpus"]
+    assert after["corpus"] == before["corpus"]
 
     # wiped-checkpoint logical replay: epoch batch ids make every
     # mutation (index append AND corpus append) a no-op
-    import shutil
-
-    shutil.rmtree(ckpt)
-    stream_corpus_ticks(spark, crawl, root, ckpt)
-    assert corpus.latest_version() == v
-    assert corpus_snapshot(spark, root).count() == n
-
-
-def test_wiped_checkpoint_with_new_files_still_lands_new_docs(
-    spark, sf_dir, tmp_path
-):
-    """Regression (content-derived batch ids, streaming/batchid.py):
-    checkpoint lost AFTER new crawl files were staged — the restarted
-    stream's epoch 0 re-bundles old+new docs; a positional batch id
-    would silently no-op the whole bundle, dropping the new docs."""
-    d1, d2 = _days(spark, sf_dir)
-    crawl = str(tmp_path / "crawl")
-    root = str(tmp_path / "root")
-    ckpt = str(tmp_path / "ckpt")
-    _stage(spark, d1, crawl, 1)
-    stream_corpus_ticks(spark, crawl, root, ckpt)
-    n1 = corpus_snapshot(spark, root).count()
-
-    import shutil
-
-    shutil.rmtree(ckpt)  # checkpoint lost...
-    _stage(spark, d2, crawl, 2)  # ...after new files were staged
-    stream_corpus_ticks(spark, crawl, root, ckpt)
-    n2 = corpus_snapshot(spark, root).count()
-    assert n2 > n1  # the new day's docs landed
-    # and the old day's docs did not double up
-    snap = corpus_snapshot(spark, root)
-    assert snap.count() == snap.select("doc_id").distinct().count()
+    (cycle,) = crawl_replay["wiped"]["cycles"]
+    assert cycle["batch_id"] == crawl_lake["outs"][0]["cycles"][0]["batch_id"]
+    assert cycle["n_appended"] == 0
+    after = crawl_replay["after_wiped"]
+    assert after["versions"]["corpus"] == before["versions"]["corpus"]
+    assert after["corpus"] == before["corpus"]

@@ -1,80 +1,10 @@
-"""Streaming daily-crawl dedup (streaming/dedup_index.py): crawl files
-→ checkpointed stream → one MinHashIndex tick per micro-batch, pairs
-accumulated exactly-once."""
+"""Streaming daily-crawl dedup: the crawl drain (pipeline/daily.py
+crawl_day_tick) ticks the MinHash index once per micro-batch (inside
+corpus_cycle), exactly-once across replays and restarts."""
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import functions as F
-
 from etl_tpch_spark.catalog import load_table
-from etl_tpch_spark.dedup.operators import minhash_lsh_pairs
-from etl_tpch_spark.streaming.dedup_index import (
-    accumulated_pairs,
-    stream_dedup_ticks,
-)
-
-
-def _stage_crawl(spark, docs, crawl_dir: str, day: int) -> None:
-    docs.select("doc_id", "text").coalesce(1).write.mode("overwrite").json(
-        os.path.join(crawl_dir, f"day{day}.json")
-    )
-
-
-def _pair_set(df):
-    return {(r.doc_a, r.doc_b, r.jaccard) for r in df.collect()}
-
-
-def test_stream_ticks_accumulate_batch_pairs(spark, sf_dir, tmp_path):
-    """Two crawl days drained through stream ticks must accumulate
-    exactly the batch operator's pair set over the full corpus (pairs
-    touching day1 ∪ pairs touching day2 = all pairs, since every doc
-    arrives in some tick)."""
-    docs = load_table(spark, sf_dir, "documents")
-    crawl = str(tmp_path / "crawl")
-    _stage_crawl(spark, docs.filter(F.col("doc_id") % 2 == 0), crawl, 1)
-
-    stream_dedup_ticks(
-        spark, crawl, str(tmp_path / "idx"), str(tmp_path / "pairs"),
-        str(tmp_path / "ckpt"),
-    )
-    _stage_crawl(spark, docs.filter(F.col("doc_id") % 2 == 1), crawl, 2)
-    stream_dedup_ticks(
-        spark, crawl, str(tmp_path / "idx"), str(tmp_path / "pairs"),
-        str(tmp_path / "ckpt"),
-    )
-
-    got = _pair_set(accumulated_pairs(spark, str(tmp_path / "pairs")))
-    want = _pair_set(minhash_lsh_pairs(docs, 0.5))
-    assert got == want and got
-
-
-def test_rerun_with_same_checkpoint_is_noop(spark, sf_dir, tmp_path):
-    """Exactly-once across restarts: draining again with nothing new
-    staged re-ingests nothing and re-emits nothing."""
-    docs = load_table(spark, sf_dir, "documents")
-    crawl = str(tmp_path / "crawl")
-    _stage_crawl(spark, docs, crawl, 1)
-
-    args = (
-        spark, crawl, str(tmp_path / "idx"), str(tmp_path / "pairs"),
-        str(tmp_path / "ckpt"),
-    )
-    stream_dedup_ticks(*args)
-    first = _pair_set(accumulated_pairs(spark, str(tmp_path / "pairs")))
-    from etl_tpch_spark.dedup.index import MinHashIndex
-
-    n_sigs = MinHashIndex(str(tmp_path / "idx")).signatures(spark).count()
-
-    stream_dedup_ticks(*args)  # nothing new staged
-    assert _pair_set(
-        accumulated_pairs(spark, str(tmp_path / "pairs"))
-    ) == first
-    assert (
-        MinHashIndex(str(tmp_path / "idx")).signatures(spark).count()
-        == n_sigs
-    )
 
 
 def test_replayed_epoch_appends_nothing(spark, sf_dir, tmp_path):
@@ -101,47 +31,18 @@ def test_replayed_epoch_appends_nothing(spark, sf_dir, tmp_path):
     assert idx.signatures(spark).count() == n_sigs
 
 
-def test_max_files_per_trigger_splits_ticks_same_result(
-    spark, sf_dir, tmp_path
-):
-    """Backlog control: many staged files drained one-per-tick give the
-    same accumulated pair set as a single big tick (union-of-ticks ≡
-    batch, the property that makes the cap safe to tune)."""
-    docs = load_table(spark, sf_dir, "documents")
-    crawl = str(tmp_path / "crawl")
-    for day in range(3):
-        _stage_crawl(
-            spark, docs.filter(F.col("doc_id") % 3 == day), crawl, day
-        )
-
-    stream_dedup_ticks(
-        spark, crawl, str(tmp_path / "idx"), str(tmp_path / "pairs"),
-        str(tmp_path / "ckpt"), max_files_per_trigger=1,
-    )
-    got = _pair_set(accumulated_pairs(spark, str(tmp_path / "pairs")))
-    want = _pair_set(minhash_lsh_pairs(docs, 0.5))
-    assert got == want and got
-
-
-def test_post_drain_compaction_preserves_results(spark, sf_dir, tmp_path):
-    """Index maintenance: with a low compact threshold, the post-drain
-    OPTIMIZE shrinks the signature index's file count while later ticks
-    keep producing the same pairs as the batch operator."""
-    from etl_tpch_spark.dedup.index import MinHashIndex
-
-    docs = load_table(spark, sf_dir, "documents")
-    crawl = str(tmp_path / "crawl")
-    for day in range(3):
-        _stage_crawl(
-            spark, docs.filter(F.col("doc_id") % 3 == day), crawl, day
-        )
-    stream_dedup_ticks(
-        spark, crawl, str(tmp_path / "idx"), str(tmp_path / "pairs"),
-        str(tmp_path / "ckpt"), max_files_per_trigger=1,
-        compact_over_files=1,
-    )
-    idx = MinHashIndex(str(tmp_path / "idx"))
-    assert len(idx.table.snapshot_files()) <= 8  # compacted post-drain
-    got = _pair_set(accumulated_pairs(spark, str(tmp_path / "pairs")))
-    want = _pair_set(minhash_lsh_pairs(docs, 0.5))
-    assert got == want and got
+def test_rerun_with_same_checkpoint_is_noop(crawl_replay):
+    """Exactly-once across restarts: draining again with nothing new
+    staged re-ingests nothing; a wiped checkpoint's re-drain of the
+    same files replays the recorded batch id and ingests nothing
+    either."""
+    before = crawl_replay["before"]
+    assert before["signatures"] > 0
+    assert crawl_replay["rerun"]["cycles"] == []
+    for key in ("after_rerun", "after_wiped"):
+        after = crawl_replay[key]
+        assert after["signatures"] == before["signatures"], key
+        assert (
+            after["versions"]["dedup_index"]
+            == before["versions"]["dedup_index"]
+        ), key

@@ -1,108 +1,31 @@
-"""Streaming LM quality-scoring (streaming/lm_scores.py): crawl files
-→ checkpointed stream → one LmIndex.score tick per micro-batch,
-scored rows accumulated exactly-once and equal to batch scoring."""
+"""Streaming LM quality-scoring: the crawl drain (pipeline/daily.py
+crawl_day_tick) scores each micro-batch with LmIndex.score and
+appends the rows exactly-once.  Equality with batch scoring is in
+test_crawl_drain.py."""
 
 from __future__ import annotations
 
-import os
 
-from pyspark.sql import functions as F
-
-from etl_tpch_spark.catalog import load_table
-from etl_tpch_spark.pipeline.lm_index import LmIndex
-from etl_tpch_spark.queries.text import _LM_REF_SOURCE
-from etl_tpch_spark.streaming.lm_scores import (
-    accumulated_scores,
-    stream_lm_score_ticks,
-)
-
-_COLS = ("doc_id", "text", "lang", "source")
-
-
-def _stage_crawl(spark, docs, crawl_dir: str, day: int) -> None:
-    docs.select(*_COLS).coalesce(1).write.mode("overwrite").json(
-        os.path.join(crawl_dir, f"day{day}.json")
-    )
-
-
-def _rows(df):
-    return {
-        (r.doc_id, r.n_bigrams, r.covered_bigrams, r.avg_p_micro)
-        for r in df.collect()
-    }
-
-
-def _built_lm(spark, sf_dir, tmp_path) -> str:
-    lm_path = str(tmp_path / "lm")
-    ref = load_table(spark, sf_dir, "documents").filter(
-        F.col("source") == _LM_REF_SOURCE
-    )
-    LmIndex(lm_path).ingest(ref, batch_id="ref-0")
-    return lm_path
-
-
-def test_stream_scores_equal_batch_scoring(spark, sf_dir, tmp_path):
-    """Two crawl days drained through stream ticks accumulate exactly
-    the batch scores over the full corpus — scoring is per-doc, so
-    tick boundaries are invisible in the result."""
-    docs = load_table(spark, sf_dir, "documents")
-    lm_path = _built_lm(spark, sf_dir, tmp_path)
-    crawl = str(tmp_path / "crawl")
-    args = (
-        spark, crawl, lm_path, str(tmp_path / "scores"),
-        str(tmp_path / "ckpt"),
-    )
-
-    _stage_crawl(spark, docs.filter(F.col("doc_id") % 2 == 0), crawl, 1)
-    stream_lm_score_ticks(*args)
-    _stage_crawl(spark, docs.filter(F.col("doc_id") % 2 == 1), crawl, 2)
-    stream_lm_score_ticks(*args)
-
-    got = _rows(accumulated_scores(spark, str(tmp_path / "scores")))
-    want = _rows(LmIndex(lm_path).score(spark, docs))
-    assert got == want and got
-
-
-def test_rerun_with_same_checkpoint_is_noop(spark, sf_dir, tmp_path):
-    docs = load_table(spark, sf_dir, "documents")
-    lm_path = _built_lm(spark, sf_dir, tmp_path)
-    crawl = str(tmp_path / "crawl")
-    args = (
-        spark, crawl, lm_path, str(tmp_path / "scores"),
-        str(tmp_path / "ckpt"),
-    )
-    _stage_crawl(spark, docs, crawl, 1)
-    stream_lm_score_ticks(*args)
-    scores = str(tmp_path / "scores")
-    first = _rows(accumulated_scores(spark, scores))
-    v1 = LmIndex(lm_path).table.latest_version()
-
-    stream_lm_score_ticks(*args)  # nothing new staged
-    assert _rows(accumulated_scores(spark, scores)) == first
+def test_rerun_with_same_checkpoint_is_noop(crawl_replay):
+    before = crawl_replay["before"]
+    assert before["scores"]
+    assert crawl_replay["rerun"]["cycles"] == []  # nothing new staged
+    after = crawl_replay["after_rerun"]
+    assert after["scores"] == before["scores"]
+    assert after["versions"]["scores"] == before["versions"]["scores"]
     # ticks never write the LM itself
-    assert LmIndex(lm_path).table.latest_version() == v1
+    assert after["versions"]["lm"] == before["versions"]["lm"]
 
 
-def test_wiped_checkpoint_replay_appends_nothing(
-    spark, sf_dir, tmp_path
-):
+def test_wiped_checkpoint_replay_appends_nothing(crawl_replay):
     """Content-derived batch ids: wiping the checkpoint and
     re-draining the SAME staged files re-scores nothing — the tick's
     batch id is (checkpoint name, epoch, content fingerprint), all
     three of which the replay reproduces, so the TxTable append
     no-ops even though the file-source checkpoint is gone."""
-    import shutil
-
-    docs = load_table(spark, sf_dir, "documents")
-    lm_path = _built_lm(spark, sf_dir, tmp_path)
-    crawl = str(tmp_path / "crawl")
-    scores = str(tmp_path / "scores")
-    ckpt = str(tmp_path / "ckpt")
-
-    _stage_crawl(spark, docs, crawl, 1)
-    stream_lm_score_ticks(spark, crawl, lm_path, scores, ckpt)
-    first = _rows(accumulated_scores(spark, scores))
-
-    shutil.rmtree(ckpt)
-    stream_lm_score_ticks(spark, crawl, lm_path, scores, ckpt)
-    assert _rows(accumulated_scores(spark, scores)) == first
+    before = crawl_replay["before"]
+    assert len(crawl_replay["wiped"]["cycles"]) == 1
+    after = crawl_replay["after_wiped"]
+    assert after["scores"] == before["scores"]
+    assert after["versions"]["scores"] == before["versions"]["scores"]
+    assert after["versions"]["lm"] == before["versions"]["lm"]

@@ -1,70 +1,23 @@
-"""Streaming inverted-index ticks (streaming/search_index.py): crawl
-files → checkpointed stream → one SearchIndex ingest per micro-batch;
-the drained index equals a one-shot build, re-draining mutates
-nothing, and a wiped checkpoint over re-bundled files still no-ops
-(content-derived batch ids)."""
+"""Streaming inverted-index ticks: the crawl drain (pipeline/daily.py
+crawl_day_tick) ingests each micro-batch into the SearchIndex;
+re-draining mutates nothing, and a wiped checkpoint over the same
+files still no-ops (content-derived batch ids).  BM25 equality with a
+one-shot build is in test_crawl_drain.py."""
 
 from __future__ import annotations
 
-import os
-import shutil
 
-from pyspark.sql import functions as F
-
-from etl_tpch_spark.catalog import load_table
-from etl_tpch_spark.pipeline.search_index import SearchIndex
-from etl_tpch_spark.queries.text import _BM25_TERMS, _BM25_TOPK
-from etl_tpch_spark.streaming.search_index import stream_search_ticks
-
-
-def _stage(docs, crawl_dir: str, day: int) -> None:
-    docs.select("doc_id", "text").coalesce(1).write.mode("overwrite").json(
-        os.path.join(crawl_dir, f"day{day}.json")
-    )
-
-
-def test_drained_index_equals_one_shot_build(spark, sf_dir, tmp_path):
-    docs = load_table(spark, sf_dir, "documents")
-    crawl = str(tmp_path / "crawl")
-    for day in range(3):
-        _stage(docs.filter(F.col("doc_id") % 3 == day), crawl, day)
-    idx_path = str(tmp_path / "inv")
-    stream_search_ticks(
-        spark, crawl, idx_path, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-    )
-    idx = SearchIndex(idx_path)
-    # three micro-batches → three ingests per table
-    assert idx.postings.latest_version() == 3
-    got = [
-        tuple(r)
-        for r in idx.search(spark, _BM25_TERMS, _BM25_TOPK).collect()
-    ]
-    clean = SearchIndex(str(tmp_path / "clean"))
-    clean.ingest(docs, batch_id="one-shot")
-    want = [
-        tuple(r)
-        for r in clean.search(spark, _BM25_TERMS, _BM25_TOPK).collect()
-    ]
-    assert got == want
-
-
-def test_redrain_and_wiped_checkpoint_are_noops(spark, sf_dir, tmp_path):
-    docs = load_table(spark, sf_dir, "documents")
-    crawl = str(tmp_path / "crawl")
-    for day in range(2):
-        _stage(docs.filter(F.col("doc_id") % 2 == day), crawl, day)
-    idx_path = str(tmp_path / "inv")
-    ckpt = str(tmp_path / "ckpt")
-    stream_search_ticks(spark, crawl, idx_path, ckpt)
-    idx = SearchIndex(idx_path)
-    p_v, d_v = idx.postings.latest_version(), idx.doclens.latest_version()
+def test_redrain_and_wiped_checkpoint_are_noops(crawl_replay):
+    before = crawl_replay["before"]
+    assert before["doclens"]
     # same checkpoint: the source knows the files are consumed
-    stream_search_ticks(spark, crawl, idx_path, ckpt)
-    assert idx.postings.latest_version() == p_v
-    assert idx.doclens.latest_version() == d_v
-    # wiped checkpoint: every file replays, content ids no-op the ticks
-    shutil.rmtree(ckpt)
-    stream_search_ticks(spark, crawl, idx_path, ckpt)
-    assert idx.postings.latest_version() == p_v
-    assert idx.doclens.latest_version() == d_v
+    assert crawl_replay["rerun"]["cycles"] == []
+    # wiped checkpoint: the file replays, content ids no-op the tick
+    assert len(crawl_replay["wiped"]["cycles"]) == 1
+    for key in ("after_rerun", "after_wiped"):
+        after = crawl_replay[key]
+        assert after["doclens"] == before["doclens"], key
+        for store in ("search_index/postings", "search_index/doclens"):
+            assert (
+                after["versions"][store] == before["versions"][store]
+            ), (key, store)

@@ -1,84 +1,19 @@
-"""Streaming daily-crawl span dedup (streaming/span_index.py): crawl
-files → checkpointed stream → one SpanIndex tick per micro-batch,
-spans accumulated exactly-once with prefix semantics (each doc's spans
-are vs the corpus seen up to and including its own tick)."""
+"""Streaming daily-crawl span dedup: the crawl drain (pipeline/daily.py
+crawl_day_tick) ticks the SpanIndex once per micro-batch and appends
+its spans exactly-once.  Prefix semantics are in test_crawl_drain.py."""
 
 from __future__ import annotations
 
-import os
 
-from pyspark.sql import functions as F
-
-from etl_tpch_spark.catalog import load_table
-from etl_tpch_spark.queries.text import _duplicate_spans
-from etl_tpch_spark.streaming.span_index import (
-    accumulated_spans,
-    stream_span_ticks,
-)
-
-
-class _T:  # Tables-shaped shim for _duplicate_spans over a subset
-    def __init__(self, docs):
-        self.documents = docs
-
-
-def _stage(spark, docs, crawl_dir: str, day: int) -> None:
-    docs.select("doc_id", "text").coalesce(1).write.mode("overwrite").json(
-        os.path.join(crawl_dir, f"day{day}.json")
-    )
-
-
-def _span_set(df):
-    return {
-        (r.doc_id, r.span_start, r.span_end, r.n_tokens, r.n_windows)
-        for r in df.collect()
-    }
-
-
-def test_stream_ticks_match_prefix_batch_semantics(spark, sf_dir, tmp_path):
-    """Tick t's spans for its docs must equal the batch operator run
-    over the prefix corpus (all docs arrived by tick t), restricted to
-    tick t's docs — the daily-crawl contract."""
-    docs = load_table(spark, sf_dir, "documents")
-    day1 = docs.filter(F.col("doc_id") % 2 == 0)
-    day2 = docs.filter(F.col("doc_id") % 2 == 1)
-    crawl = str(tmp_path / "crawl")
-    args = (
-        spark, crawl, str(tmp_path / "idx"), str(tmp_path / "spans"),
-        str(tmp_path / "ckpt"),
-    )
-
-    _stage(spark, day1, crawl, 1)
-    stream_span_ticks(*args)
-    _stage(spark, day2, crawl, 2)
-    stream_span_ticks(*args)
-
-    got = _span_set(accumulated_spans(spark, str(tmp_path / "spans")))
-    want = {
-        s for s in _span_set(_duplicate_spans(_T(day1))) if s[0] % 2 == 0
-    } | {
-        s for s in _span_set(_duplicate_spans(_T(docs))) if s[0] % 2 == 1
-    }
-    assert got == want
-    assert got  # fixture plants dup spans on both parities
-
-
-def test_rerun_with_same_checkpoint_is_noop(spark, sf_dir, tmp_path):
-    from etl_tpch_spark.dedup.spans import SpanIndex
-
-    docs = load_table(spark, sf_dir, "documents")
-    crawl = str(tmp_path / "crawl")
-    _stage(spark, docs, crawl, 1)
-    args = (
-        spark, crawl, str(tmp_path / "idx"), str(tmp_path / "spans"),
-        str(tmp_path / "ckpt"),
-    )
-    stream_span_ticks(*args)
-    first = _span_set(accumulated_spans(spark, str(tmp_path / "spans")))
-    n_rows = SpanIndex(str(tmp_path / "idx")).windows(spark).count()
-
-    stream_span_ticks(*args)  # nothing new staged
-    assert _span_set(
-        accumulated_spans(spark, str(tmp_path / "spans"))
-    ) == first
-    assert SpanIndex(str(tmp_path / "idx")).windows(spark).count() == n_rows
+def test_rerun_with_same_checkpoint_is_noop(crawl_replay):
+    before = crawl_replay["before"]
+    assert before["spans"] and before["windows"] > 0
+    assert crawl_replay["rerun"]["cycles"] == []  # nothing new staged
+    for key in ("after_rerun", "after_wiped"):
+        after = crawl_replay[key]
+        assert after["spans"] == before["spans"], key
+        assert after["windows"] == before["windows"], key
+        for store in ("spans", "span_index"):
+            assert (
+                after["versions"][store] == before["versions"][store]
+            ), (key, store)
