@@ -9,8 +9,8 @@ pipeline (coiled/etl-tpch; see SURVEY.md) as an idiomatic Spark engine:
 - ``queries``     — the analytical query surface (flagship Q3-variant,
                     adapted TPC-H set, windowed/event queries) built on
                     the central ``registry``.
-- ``operators``   — reusable relational operators (joins incl. as-of,
-                    top-k, set ops, windows).
+- ``operators``   — reusable relational operators (joins incl. as-of
+                    and range, bloom semi-joins, PageRank, skew).
 - ``functions``   — scalar function library + text analysis +
                     batch-inference pandas UDFs.
 - ``dedup``       — exact / minhash-LSH / simhash / n-gram-jaccard /

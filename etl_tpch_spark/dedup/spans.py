@@ -265,8 +265,9 @@ class SpanIndex:
         # colliding rows — plus the few false positives the exact h
         # equi-join then drops — pay the shuffle.  Measured at the 10×
         # fixture this turns a +1.1 s/10× growth term into a flat
-        # ~+0.05 s (tools/bench_daily_tick.py); the bloom build itself
-        # is O(new), a fixed ~0.8 s of per-tick machinery.  ``mine``
+        # ~+0.05 s (SCALING.md "Daily tick made O(new) end-to-end");
+        # the bloom build itself is O(new), a fixed ~0.8 s of per-tick
+        # machinery.  ``mine``
         # is checkpointed: it feeds both the bloom build and the join
         # probe.
         from ..operators.bloom import (

@@ -1,2 +1,3 @@
 """Reusable relational operators (SURVEY.md §2.3, §2.5-2.7):
-joins (incl. as-of), top-k, windowed/event-time aggregations."""
+joins (incl. as-of and range), bloom-filter semi-joins, PageRank and
+salted skew handling."""

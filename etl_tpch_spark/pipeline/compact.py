@@ -62,7 +62,6 @@ def compact_table(
     table: str,
     *,
     target_file_mb: int = 128,
-    fmt: str = "parquet",
 ) -> int:
     """Rewrite ``<processed>/<table>/`` into ≈target_file_mb files.
     Returns the resulting file count.  No-op if the table is absent."""
@@ -87,11 +86,11 @@ def compact_table(
 
     tmp = f"{path}.compact-{uuid.uuid4().hex[:8]}"
     old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    df = spark.read.format(fmt).load(path)
-    writer = df.coalesce(n_files).write.format(fmt).mode("overwrite")
+    df = spark.read.parquet(path)
+    writer = df.coalesce(n_files).write.mode("overwrite")
     if part_cols:
         writer = writer.partitionBy(*part_cols)
-    writer.save(tmp)
+    writer.parquet(tmp)
     # atomic-ish swap: two renames; readers resolve the directory at scan
     # planning time, so they see either the old or the new listing
     # (reference holds lock_compact instead, preprocess.py:89).

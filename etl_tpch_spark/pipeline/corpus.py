@@ -44,6 +44,26 @@ from .export import export_shards
 from .txlog import TxTable
 
 
+def stored_ids(
+    spark: SparkSession, docs: DataFrame, table: TxTable
+) -> DataFrame | None:
+    """The ``doc_id``s ``table`` holds in the [min, max] doc_id range of
+    ``docs``, read from only the files whose range stats overlap it.
+    None when no stored file overlaps: the all-new day, whose ids are
+    all above the stored maximum, reads no stored file at all."""
+    if table.latest_version() is None or not table.snapshot_files():
+        return None
+    b = docs.agg(
+        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+    ).collect()[0]
+    if b["lo"] is None:
+        return None
+    preds = [("doc_id", ">=", b["lo"]), ("doc_id", "<=", b["hi"])]
+    if not table.pruned_files(preds):
+        return None
+    return table.read_where(spark, preds).select("doc_id")
+
+
 def corpus_cycle(
     spark: SparkSession,
     new_docs: DataFrame,
@@ -112,26 +132,11 @@ def corpus_cycle(
     # entirely; a re-bundle scans only the file(s) whose range overlaps
     # the replayed ids.  Day cost is O(new) end-to-end, not O(corpus).
     n_seen = 0
-    if corpus.latest_version() is not None and corpus.snapshot_files():
-        b = new_docs.agg(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-        ).collect()[0]
-        overlapping = (
-            corpus.pruned_files(
-                [("doc_id", ">=", b["lo"]), ("doc_id", "<=", b["hi"])]
-            )
-            if b["lo"] is not None
-            else []
-        )
-        if overlapping:
-            existing = corpus.read_where(
-                spark,
-                [("doc_id", ">=", b["lo"]), ("doc_id", "<=", b["hi"])],
-            ).select("doc_id")
-            fresh = new_docs.join(existing, "doc_id", "left_anti")
-            n_fresh = fresh.count()
-            n_seen = n_new - n_fresh
-            new_docs = fresh
+    existing = stored_ids(spark, new_docs, corpus)
+    if existing is not None:
+        fresh = new_docs.join(existing, "doc_id", "left_anti")
+        n_seen = n_new - fresh.count()
+        new_docs = fresh
     pairs = index.tick(spark, new_docs, threshold, batch_id=batch_id)
     # first-seen-wins: a new doc is dropped iff it pairs with any
     # LOWER id (stored docs all have lower ids than a later crawl's;

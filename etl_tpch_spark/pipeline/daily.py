@@ -13,18 +13,22 @@ One ``crawl_day_tick`` call per day does:
      split assignment → exactly-once corpus append; the minhash index
      is ticked exactly once per batch, INSIDE the cycle),
    - a SpanIndex tick (duplicated-span detection vs all prior days),
-   - an LmIndex scoring tick (CCNet-style quality scores vs the
-     reference LM ingested at setup),
+   - a SearchIndex ingest (the day's postings + doclens land in the
+     inverted index, so lexical/BM25 retrieval sees same-day docs
+     without ever re-tokenizing old ones),
    - a QualityClfIndex scoring tick (the trained model gate from
      stored weights — one feature pass over the batch + one broadcast
      join; enabled when ensure_quality_classifier trained at setup),
-   - a SearchIndex ingest (the day's postings + doclens land in the
-     inverted index, so lexical/BM25 retrieval sees same-day docs
-     without ever re-tokenizing old ones).
+   - an LmIndex scoring tick (CCNet-style quality scores vs the
+     reference LM ingested at setup), last.
    One drain, one checkpoint, one batch id ⇒ the exactly-once story
    is shared: a replayed epoch no-ops in every index at once, and a
    crash BETWEEN stages replays to completion (each stage checks the
-   id independently).
+   id independently).  A batch id alone cannot catch a wiped
+   checkpoint that re-bundles drained docs with new ones under a new
+   id, so every stage takes only the docs the LM scores (the last
+   store written) do not hold yet, and a batch of only drained docs
+   runs no stage at all.
 2. **event drain** — the HLL index tick stream over staged event
    files (its own checkpoint; different source cadence); and an
    optional **vector drain** — assignment-only IVF ticks over staged
@@ -37,9 +41,9 @@ One ``crawl_day_tick`` call per day does:
    (pipeline/export.py), the artifact a training run consumes.
 
 Per-tick cost is O(new batch) against every stored index — the
-whole-composition claim measured in tools/bench_daily_tick.py and
-pinned flat across 3 simulated days at the 10× fixture in
-tests/test_daily_tick.py (VERDICT r3 #8, slow tier).  The default
+whole-composition claim measured in SCALING.md "Daily tick made
+O(new) end-to-end" and pinned flat across 3 simulated days at the 10×
+fixture in tests/test_daily_tick.py (VERDICT r3 #8, slow tier).  The default
 gate's coverage of the doc drain is tests/test_crawl_drain.py: every
 stage's store equals its batch definition over two staged days, and a
 re-run on the same checkpoint, or on a wiped one over the same files,
@@ -63,11 +67,14 @@ from pyspark.sql import functions as F
 from ..dedup.spans import SpanIndex
 from ..streaming.hll_index import stream_hll_ticks
 from ..streaming.ticks import CRAWL_SCHEMA, stream_doc_ticks
-from .corpus import corpus_cycle
+from .corpus import corpus_cycle, stored_ids
 from .export import export_shards
 from .lm_index import LmIndex
 from .search_index import SearchIndex
 from .txlog import TxTable
+
+# the doc drain's stages, in the order each micro-batch runs them
+_STAGES = ("corpus", "spans", "search", "clf", "lm")
 
 
 def ensure_reference_lm(
@@ -158,38 +165,59 @@ def crawl_day_tick(
 
     def doc_tick(batch: DataFrame, bid: str) -> None:
         # corpus cycle FIRST (it owns the minhash index tick); span,
-        # LM and inverted-index stages then ride the same batch id — a
-        # replay after a crash between stages no-ops whatever already
-        # landed.  Per-stage wall seconds ride the summary: the
-        # flatness evidence names the stage, not just the day.
+        # inverted-index, classifier and LM stages then ride the same
+        # batch id — a replay after a crash between stages no-ops
+        # whatever already landed.  Per-stage wall seconds ride the
+        # summary: the flatness evidence names the stage, not just the
+        # day.
         s0 = time.monotonic()
+        # a wiped checkpoint can re-bundle drained docs with new ones
+        # under a NEW batch id, so every stage takes only the docs not
+        # drained before.  LM scores hold one row per drained doc and
+        # land LAST: a doc id found there has been through every
+        # stage.  Like the corpus's probe, it reads no stored file on
+        # an all-new day
+        fresh, n_drained = batch, 0
+        drained = stored_ids(spark, batch, scores_t)
+        if drained is not None:
+            fresh = batch.join(drained, "doc_id", "left_anti")
+            n_fresh = fresh.count()
+            n_drained = batch.count() - n_fresh
+            if n_fresh == 0:  # no stage runs, no store advances
+                out["cycles"].append({
+                    "batch_id": bid, "n_new": n_drained,
+                    "n_seen_dropped": n_drained, "n_dup_dropped": 0,
+                    "n_quality_dropped": 0, "n_appended": 0,
+                    "stage_s": dict.fromkeys(_STAGES, 0.0),
+                })
+                return
         summary = corpus_cycle(
             spark,
-            batch,
+            fresh,
             root_dir,
             batch_id=bid,
             threshold=threshold,
             quality_floor=quality_floor,
         )
+        summary["n_new"] += n_drained
+        summary["n_seen_dropped"] += n_drained
         s1 = time.monotonic()
-        spans = span_idx.tick(spark, batch, batch_id=bid)
+        spans = span_idx.tick(spark, fresh, batch_id=bid)
         spans_t.append(spans, batch_id=bid)
         s2 = time.monotonic()
-        scores_t.append(lm_idx.score(spark, batch), batch_id=bid)
+        search_idx.ingest(fresh, batch_id=bid)
         s3 = time.monotonic()
-        search_idx.ingest(batch, batch_id=bid)
-        s4 = time.monotonic()
         if clf_enabled:
             clf_scores_t.append(
-                clf_idx.score_batch(spark, batch), batch_id=bid
+                clf_idx.score_batch(spark, fresh), batch_id=bid
             )
+        s4 = time.monotonic()
+        scores_t.append(lm_idx.score(spark, fresh), batch_id=bid)
         s5 = time.monotonic()
+        marks = (s0, s1, s2, s3, s4, s5)
         summary["stage_s"] = {
-            "corpus": round(s1 - s0, 3),
-            "spans": round(s2 - s1, 3),
-            "lm": round(s3 - s2, 3),
-            "search": round(s4 - s3, 3),
-            "clf": round(s5 - s4, 3),
+            name: round(b - a, 3)
+            for name, a, b in zip(_STAGES, marks, marks[1:])
         }
         out["cycles"].append(summary)
 

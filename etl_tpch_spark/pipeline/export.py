@@ -51,7 +51,6 @@ def export_shards(
     path: str,
     key_cols: list[str],
     n_shards: int,
-    fmt: str = "parquet",
 ) -> dict[int, int]:
     """Write ``df`` as ``n_shards`` deterministic shards under
     ``path/shard=K/``.  Returns {shard: row_count}.
@@ -77,8 +76,7 @@ def export_shards(
         .drop(_ORDER_COL)
         .write.partitionBy(SHARD_COL)
         .mode("overwrite")
-        .format(fmt)
-        .save(path)
+        .parquet(path)
     )
     # counts come from the cached pre-write frame (n_shards rows) — a
     # read-back count would re-scan everything just written, doubling
@@ -93,17 +91,14 @@ def export_shards(
     return {s: counts.get(s, 0) for s in range(n_shards)}
 
 
-def read_shard(
-    spark: SparkSession, path: str, shard: int, fmt: str = "parquet"
-) -> DataFrame:
+def read_shard(spark: SparkSession, path: str, shard: int) -> DataFrame:
     """One shard, in its written (deterministic) order when read as a
     single split — training loaders read shard files sequentially.
     Reads via the export root with a partition-pruned filter, so an
     empty shard (no ``shard=K`` directory on disk) yields an empty
     DataFrame instead of PATH_NOT_FOUND."""
     return (
-        spark.read.format(fmt)
-        .load(path)
+        spark.read.parquet(path)
         .where(F.col(SHARD_COL) == shard)
         .drop(SHARD_COL)
     )

@@ -14,8 +14,8 @@ Spark-first deltas:
 - the explicit schema (schemas.LIVE / schemas.TESTDATA) replaces
   pandas per-file inference — no inference scan, stable types at 100 TB
   (SURVEY.md §1.3);
-- append target is a parquet directory (Delta when delta-spark jars are
-  available — the write is format-pluggable, SURVEY.md §7 risk b);
+- append target is a parquet directory (delta-spark is not a
+  dependency, so the write is parquet only);
 - delete-after-write is optional; the checkpointed Structured Streaming
   ingest in ``streaming/ingest.py`` is the exactly-once replacement for
   the reference's locks (SURVEY.md T3).
@@ -50,7 +50,6 @@ def ingest_table(
     table: str,
     *,
     schema: T.StructType | None = None,
-    fmt: str = "parquet",
     delete_after: bool = False,
     partition_by: tuple[str, ...] = (),
     derive: dict[str, str] | None = None,
@@ -74,10 +73,10 @@ def ingest_table(
     df = spark.read.schema(s).json(batches)
     for col, expr in (derive or {}).items():
         df = df.withColumn(col, F.expr(expr))
-    writer = df.write.format(fmt).mode("append")
+    writer = df.write.mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.save(os.path.join(processed_dir, table))
+    writer.parquet(os.path.join(processed_dir, table))
     if delete_after:  # reference's consume-and-delete (preprocess.py:45)
         for b in batches:
             shutil.rmtree(b, ignore_errors=True)
@@ -91,7 +90,6 @@ def ingest_table_tolerant(
     table: str,
     *,
     schema: T.StructType | None = None,
-    fmt: str = "parquet",
     quarantine_dir: str | None = None,
 ) -> tuple[int, int]:
     """Corrupt-tolerant ingest: malformed JSON lines are *quarantined*,
@@ -135,9 +133,7 @@ def ingest_table_tolerant(
         bad.write.mode("append").json(
             os.path.join(quarantine_dir, table)
         )
-    good.write.format(fmt).mode("append").save(
-        os.path.join(processed_dir, table)
-    )
+    good.write.mode("append").parquet(os.path.join(processed_dir, table))
     n_good = good.count()
     df.unpersist()
     return (n_good, n_bad)
@@ -148,7 +144,6 @@ def read_processed(
     processed_dir: str,
     table: str,
     *,
-    fmt: str = "parquet",
     merge_schema: bool = True,
 ) -> "DataFrame":
     """Read a processed table with schema evolution: batches appended
@@ -157,9 +152,8 @@ def read_processed(
     instead of one.  At 100 TB turn this into a table-property (set
     once at evolution time) rather than paying footer-merge per read."""
     return (
-        spark.read.format(fmt)
-        .option("mergeSchema", str(merge_schema).lower())
-        .load(os.path.join(processed_dir, table))
+        spark.read.option("mergeSchema", str(merge_schema).lower())
+        .parquet(os.path.join(processed_dir, table))
     )
 
 

@@ -29,7 +29,6 @@ def cluster_write(
     cols: list[str],
     *,
     n_files: int,
-    fmt: str = "parquet",
     mode: str = "overwrite",
 ) -> None:
     """Write ``df`` range-clustered on ``cols`` into ~``n_files`` files
@@ -37,9 +36,8 @@ def cluster_write(
     (
         df.repartitionByRange(n_files, *[F.col(c) for c in cols])
         .sortWithinPartitions(*cols)
-        .write.format(fmt)
-        .mode(mode)
-        .save(path)
+        .write.mode(mode)
+        .parquet(path)
     )
 
 

@@ -350,9 +350,8 @@ def score_with_weights(feat: DataFrame, w: list[int]) -> DataFrame:
     )
 
 
-# Bucket-count scale axis (VERDICT r8 #2, measured —
-# tools/bench_clf_buckets.py, SCALING.md "Classifier bucket-count
-# scale axis").  Three z plans trade:
+# Bucket-count scale axis (VERDICT r8 #2, measured — SCALING.md
+# "Classifier bucket-count scale axis").  Three z plans trade:
 #
 # - fold (plan literal): the (B+1)-element literal's construction +
 #   analysis + codegen is a FIXED per-plan toll, linear in B

@@ -114,7 +114,6 @@ def query_reduce(
     cutoff: datetime | str,
     segments: tuple[str, ...] = SEGMENTS,
     k: int = 50,
-    fmt: str = "parquet",
 ) -> dict[str, str]:
     """Flow ``query_reduce`` (reduce.py:81-86): one snappy parquet
     result per segment, ``results/<seg.lower()>.snappy.parquet``.
@@ -134,7 +133,7 @@ def query_reduce(
     every previous gold file intact rather than a mix of ticks.  The
     materialized rows are released before returning.
     """
-    load = lambda t: spark.read.format(fmt).load(  # noqa: E731
+    load = lambda t: spark.read.parquet(  # noqa: E731
         os.path.join(processed_dir, t)
     )
     per_segment = W.partitionBy("c_mktsegment").orderBy(

@@ -27,7 +27,7 @@ pipeline/hll_index.py, similarity/index.py):
 2. **exactly-once** — both table appends are idempotent under
    batch-id suffixes (``-po`` / ``-dl``); a crash BETWEEN the two
    commits replays to completion (the landed half no-ops, the missing
-   half lands), the same two-table pattern as stream_apply_cdc.
+   half lands).
 3. **shared definition** — search scores with functions/bm25.py, the
    SAME kernel the full-scan query uses, so ``text_bm25_topk_indexed``
    equals ``text_bm25_topk`` by construction (pinned in

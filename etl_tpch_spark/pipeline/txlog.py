@@ -17,8 +17,7 @@ reduce.py:43-54 snapshot reads) on plain parquet:
   every version stays readable until ``vacuum``.
 - **exactly-once appends**: an optional ``batch_id`` is recorded in the
   commit; an append whose batch_id already appears in the log is a
-  no-op (the streaming foreachBatch replay contract, like
-  pipeline/matview.py).
+  no-op (the streaming foreachBatch replay contract).
 - **MERGE (keyed upsert)**: matching keys replace, new keys insert,
   committed copy-on-write and pinned to the snapshot it was computed
   from — any rival commit aborts the merge (Delta's serializable
@@ -43,7 +42,7 @@ reduce.py:43-54 snapshot reads) on plain parquet:
   Delta's ``_last_checkpoint`` protocol.  Without it, each streaming
   append of a long-lived table re-reads O(commits) JSON entries.
 
-SCOPE: like matview.py, correctness relies on POSIX atomic create
+SCOPE: correctness relies on POSIX atomic create
 within one directory — local/NFS-with-O_EXCL filesystems.  On S3, swap
 the commit primitive for a conditional PUT (the same adaptation real
 Delta/Iceberg deployments make); everything else is engine-agnostic.
@@ -835,10 +834,10 @@ class TxTable:
         if dup:
             # Delta's multiple-source-matches error: two update rows
             # for one key would BOTH land, corrupting the keyed table
-            # silently.  CDC callers collapse first (latest_per_key).
+            # silently.  CDC callers collapse to one row per key first.
             raise ValueError(
                 f"merge updates contain duplicate {key!r} values "
-                f"(e.g. {dup[0][0]!r}); collapse with latest_per_key "
+                f"(e.g. {dup[0][0]!r}); collapse to one row per key "
                 "before merging"
             )
         start_v = self.latest_version()

@@ -237,8 +237,8 @@ def text_quality_classifier_join(
     (linear in B, measured 27 s at B=1M) stops amortizing — measured
     crossover and both regimes in SCALING.md "Classifier bucket-count
     scale axis".  Same oracle as the fold form: integer sums commute,
-    so the two plans are output-identical (also pinned at every
-    measured B by tools/bench_clf_buckets.py's fingerprint assert)."""
+    so the two plans are output-identical (also asserted at every
+    measured B in that SCALING.md section)."""
     from ..functions.text import tokens
     from ..pipeline.quality_clf import (
         _BUCKETS_EXPR,

@@ -9,7 +9,7 @@ checkpointed Structured Streaming file source (SURVEY.md §3.2, T3):
   re-running never re-ingests a file (no deletes needed; the optional
   ``cleanSource="delete"`` reproduces the reference's consume-and-delete);
 - **exactly-once**: file-source offsets + sink commit log in the
-  checkpoint give end-to-end exactly-once into a parquet/delta sink;
+  checkpoint give end-to-end exactly-once into a parquet sink;
 - **micro-batch trigger**: ``Trigger.AvailableNow`` drains the backlog
   then stops — the scheduler-friendly equivalent of the reference's
   15-min Prefect deployment (T1); a ``processingTime`` trigger turns the
@@ -41,7 +41,6 @@ def stream_ingest_table(
     table: str,
     *,
     schema: T.StructType | None = None,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
     clean_source: str | None = None,
     await_termination: bool = True,
@@ -84,7 +83,7 @@ def stream_ingest_table(
         )
 
     q = (
-        src.writeStream.format(fmt)
+        src.writeStream.format("parquet")
         .option("checkpointLocation", os.path.join(checkpoint_dir, table))
         .option("path", os.path.join(processed_dir, table))
         .outputMode("append")

@@ -30,6 +30,9 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections import Counter
+
+from pyspark.sql import functions as F
 
 from etl_tpch_spark.pipeline.corpus import corpus_cycle
 from etl_tpch_spark.pipeline.daily import crawl_day_tick
@@ -155,12 +158,24 @@ def test_wiped_checkpoint_lands_exactly_new_docs(
 ):
     """A checkpoint lost after a new file was staged: the restarted
     drain's epoch 0 re-bundles old and new docs under a new content
-    id.  The corpus drops the old ids up front and gains exactly what
-    a manual tick of the new day gains."""
+    id.  The drain drops every old doc up front, so the corpus gains
+    exactly what a manual tick of the new day gains, the score tables
+    and doclens keep one row per doc, and no store's rows for the old
+    docs change."""
     root, base = crawl_lake["root"], crawl_lake["base"]
     manual = crawl_lake["manual"]
     d2 = crawl_lake["days"][2]
-    seen = [i for i, _ in corpus_rows(root, spark) if i % 3 == 0]
+
+    def rows(name, old):
+        df = TxTable(os.path.join(root, name)).read(spark)
+        df = df.filter((F.col("doc_id") % 3 < 2) == old)
+        return Counter(repr(r) for r in df.collect())  # rows may hold arrays
+
+    keyed = (
+        "corpus", "dedup_index", "spans", "span_index", "scores",
+        "search_index/postings", "search_index/doclens", "clf_scores",
+    )
+    old_rows = {n: rows(n, True) for n in keyed}
     crawl = str(base / "crawl" / "d0")
     stage(d2, crawl, 2)
     shutil.rmtree(os.path.join(root, "checkpoints", "docs"))
@@ -168,8 +183,15 @@ def test_wiped_checkpoint_lands_exactly_new_docs(
 
     want = corpus_cycle(spark, d2.select(*COLS), manual, batch_id="day-2")
     (cycle,) = out["cycles"]
-    assert cycle["n_seen_dropped"] == len(seen) > 0
+    assert cycle["n_seen_dropped"] == crawl_lake["days"][0].count() > 0
     assert cycle["n_appended"] == want["n_appended"] > 0
     got = corpus_rows(root, spark)
     assert got == corpus_rows(manual, spark)
     assert len(got) == len({doc_id for doc_id, _ in got})
+
+    n_docs = crawl_lake["staged"].count() + d2.count()
+    for n in ("scores", "clf_scores", "search_index/doclens"):
+        ids = TxTable(os.path.join(root, n)).read(spark).select("doc_id")
+        assert ids.count() == ids.distinct().count() == n_docs, n
+    assert {n: rows(n, True) for n in keyed} == old_rows
+    assert rows("scores", False)  # the new day did land

@@ -6,8 +6,8 @@ event ticks → corpus append → export, with per-day wall time recorded.
 What THIS file pins is the whole cadence over three days: exactly-once
 is shared across stages (HLL events included), export and retention
 run, the drift gate retrains, and the per-day cost stays bounded as
-the corpus grows (the 10× flatness measurement lives in
-tools/bench_daily_tick.py → SCALING.md).
+the corpus grows (the 10× flatness measurement lives in SCALING.md
+"Daily tick made O(new) end-to-end").
 
 Slow tier (VERDICT r7 #5): the multi-day fixture is inherently
 expensive (three full cadence days before any assertion); the module
@@ -203,8 +203,8 @@ def test_export_shards_written(spark, three_days):
 def test_per_day_wall_is_bounded(three_days):
     """Fixed-size daily batches against a growing corpus: day 3 must
     not cost more than 2× day 2 (the O(new)-per-tick shape; the strict
-    10×-corpus flatness curve is measured in tools/bench_daily_tick.py
-    and recorded in SCALING.md — this is the in-suite tripwire)."""
+    10×-corpus flatness curve is recorded in SCALING.md "Daily tick
+    made O(new) end-to-end" — this is the in-suite tripwire)."""
     _, _, _, outs = three_days
     walls = [o["wall_s"] for o in outs]
     assert len(walls) == 3

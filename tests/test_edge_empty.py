@@ -16,7 +16,6 @@ from etl_tpch_spark.dedup.operators import (
 from etl_tpch_spark.operators.joins import asof_join
 from etl_tpch_spark.pipeline.quality import check_unique, run_expectations
 from etl_tpch_spark.pipeline.stats import column_profile
-from etl_tpch_spark.pipeline.upsert import latest_per_key
 from etl_tpch_spark.similarity.ann import (
     cosine_pairs_threshold,
     quantized_cosine_pairs,
@@ -71,11 +70,6 @@ def test_profile_on_empty_table(spark):
     df = _empty(spark, DOCS_SCHEMA)
     row = column_profile(df, ["doc_id"]).first()
     assert row.n_rows == 0 and row.n_not_null == 0 and row.ndv == 0
-
-
-def test_latest_per_key_on_empty(spark):
-    df = spark.createDataFrame([], "k long, v string, version long")
-    assert latest_per_key(df, "k", "version").count() == 0
 
 
 def test_asof_join_empty_sides(spark):

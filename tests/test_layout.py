@@ -5,18 +5,20 @@ a random layout."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pyarrow.parquet as pq
 
 from pyspark.sql import functions as F
 
 from etl_tpch_spark.catalog import load_table
-from etl_tpch_spark.pipeline.io import table_files
 from etl_tpch_spark.pipeline.layout import cluster_write, zorder_key_2d
 
 
 def _file_ranges(path: str, col: str) -> list[tuple]:
     out = []
-    for f in table_files(path):
+    for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
         md = pq.ParquetFile(f).metadata
         idx = md.schema.names.index(col)
         mins, maxs = [], []

@@ -1,5 +1,6 @@
 """Every ``etl_tpch_spark`` module is reachable from a production entry
-point, or is on a short allowlist with a reason.
+point, and every engine import a script makes names something that
+exists.
 
 The seeds are what runs outside the test suite: the registry's query
 modules, the ``python -m etl_tpch_spark`` CLI, and whatever
@@ -10,7 +11,12 @@ imported (for its module list), and no Spark session starts.
 
 A module that only tests import is a second definition waiting to
 drift from the one production runs.  Such a module gets a production
-caller, goes on the allowlist with a one-line reason, or is deleted."""
+caller, or is deleted together with its tests.
+
+The reachability walk skips a dotted name it cannot find (``from a
+import b`` may name a function, not a submodule), so a script that
+imports a deleted module would pass it silently; the second test
+closes that gap for the entry points and the kept ``tools/`` scripts."""
 
 from __future__ import annotations
 
@@ -22,36 +28,6 @@ from etl_tpch_spark.registry import _QUERY_MODULES
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "etl_tpch_spark"
-
-# library modules that only tests use today; each one gets a
-# production caller or is deleted together with its tests
-ALLOWLIST = {
-    "etl_tpch_spark.operators.topk": (
-        "global/per-group top-k helpers; the queries inline their ranking"
-    ),
-    "etl_tpch_spark.pipeline.bucketed": (
-        "bucketed fact tables; no pipeline stage writes bucketed tables"
-    ),
-    "etl_tpch_spark.pipeline.io": (
-        "format-pluggable table I/O; the pipeline reads parquet only"
-    ),
-    "etl_tpch_spark.pipeline.matview": (
-        "incremental materialized views; no stage maintains one yet"
-    ),
-    "etl_tpch_spark.pipeline.snapshots": (
-        "hardlink time travel for parquet; TxTable versions do the job"
-    ),
-    "etl_tpch_spark.pipeline.upsert": (
-        "keyed parquet upsert; only streaming.sink and tests call it"
-    ),
-    "etl_tpch_spark.sources": "package of sources.synthetic below",
-    "etl_tpch_spark.sources.synthetic": (
-        "Python DataSource event generator; no stage reads through it"
-    ),
-    "etl_tpch_spark.streaming.sink": (
-        "merge/CDC/txlog foreachBatch sinks; no stage streams into them"
-    ),
-}
 
 
 def _package_modules() -> dict[str, tuple[str, bool]]:
@@ -106,34 +82,90 @@ def _reachable(seeds) -> set[str]:
     return seen
 
 
-def _seeds() -> list[str]:
-    seeds = [*_QUERY_MODULES, f"{PKG}.__main__"]
-    entry_files = [
+def _entry_files() -> list[str]:
+    return [
         os.path.join(REPO, "bench.py"),
         os.path.join(REPO, "__spark_entry__.py"),
         *glob.glob(os.path.join(REPO, "perfbench", "*.py")),
     ]
-    for path in entry_files:
+
+
+def _top_level_names(path: str) -> set[str]:
+    """Names a module binds at top level: defs, classes, assignments
+    and imports."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    names = set()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = (
+                node.targets if isinstance(node, ast.Assign) else [node.target]
+            )
+            names.update(
+                n.id for t in targets for n in ast.walk(t)
+                if isinstance(n, ast.Name)
+            )
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update(
+                (a.asname or a.name).split(".")[0] for a in node.names
+            )
+    return names
+
+
+def _unresolved_imports(path: str, modules) -> list[str]:
+    """``etl_tpch_spark`` imports in ``path`` that name no module, or a
+    name its module does not define."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    bad = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            bad += [
+                a.name for a in node.names
+                if a.name.split(".")[0] == PKG and a.name not in modules
+            ]
+        elif isinstance(node, ast.ImportFrom) and not node.level:
+            base = node.module or ""
+            if base.split(".")[0] != PKG:
+                continue
+            if base not in modules:
+                bad.append(base)
+                continue
+            defined = _top_level_names(modules[base][0])
+            bad += [
+                f"{base}.{a.name}" for a in node.names
+                if a.name != "*"
+                and a.name not in defined
+                and f"{base}.{a.name}" not in modules
+            ]
+    return bad
+
+
+def _seeds() -> list[str]:
+    seeds = [*_QUERY_MODULES, f"{PKG}.__main__"]
+    for path in _entry_files():
         seeds += [
             n for n in _imported_names(path) if n.split(".")[0] == PKG
         ]
     return seeds
 
 
-def test_every_module_is_reachable_or_allowlisted():
-    reachable = _reachable(_seeds())
-    orphans = sorted(set(_package_modules()) - reachable - set(ALLOWLIST))
+def test_every_module_is_reachable():
+    orphans = sorted(set(_package_modules()) - _reachable(_seeds()))
     assert not orphans, (
         f"modules no production entry point imports: {orphans}; give "
-        "each a caller, delete it, or allowlist it with a reason"
+        "each a caller, or delete it with its tests"
     )
 
 
-def test_allowlist_names_only_unreachable_modules():
-    """An allowlist entry whose module is gone, or has gained a
-    production caller, is stale and must be dropped."""
-    modules = set(_package_modules())
-    reachable = _reachable(_seeds())
-    assert all(reason.strip() for reason in ALLOWLIST.values())
-    assert sorted(set(ALLOWLIST) - modules) == []
-    assert sorted(set(ALLOWLIST) & reachable) == []
+def test_script_imports_name_existing_modules():
+    modules = _package_modules()
+    scripts = _entry_files() + glob.glob(os.path.join(REPO, "tools", "*.py"))
+    bad = {
+        os.path.relpath(path, REPO): names
+        for path in scripts
+        if (names := _unresolved_imports(path, modules))
+    }
+    assert not bad, f"imports of missing engine modules or names: {bad}"

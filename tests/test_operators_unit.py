@@ -1,6 +1,6 @@
 """Per-operator unit tests on tiny literal DataFrames (SURVEY.md §5
 item 3): boundary semantics the sf-level oracle diff can't isolate —
-as-of at equal timestamps / missing matches, top-k ties, dedup kernels
+as-of at equal timestamps / missing matches, dedup kernels
 on crafted near-duplicates, revenue expression edges.
 """
 
@@ -21,7 +21,6 @@ from etl_tpch_spark.dedup.operators import (
 )
 from etl_tpch_spark.functions.agg import rev_dec
 from etl_tpch_spark.operators.joins import asof_join, range_join
-from etl_tpch_spark.operators.topk import topk, topk_per_group
 
 
 def _ts(s: str) -> datetime:
@@ -87,40 +86,6 @@ def test_range_join_bounds(spark):
         for r in range_join(left, right, "k", cond).select(left.lo, right.v).collect()
     )
     assert got == [(10, 15), (20, 25)]  # (2,40) out of range
-
-
-# ---------------------------------------------------------------- top-k
-
-
-def test_topk_ties_deterministic(spark):
-    df = spark.createDataFrame(
-        [("a", 5), ("b", 5), ("c", 5), ("d", 4)], "id string, score int"
-    )
-    got = [
-        r.id
-        for r in topk(
-            df, [F.col("score").desc(), F.col("id")], 2
-        ).collect()
-    ]
-    assert got == ["a", "b"]  # tie broken by id, stable across runs
-
-
-def test_topk_per_group_exact_k(spark):
-    df = spark.createDataFrame(
-        [(g, i, g * 10 + i) for g in (1, 2) for i in range(5)],
-        "grp int, i int, score int",
-    )
-    out = topk_per_group(
-        df, ["grp"], [F.col("score").desc(), F.col("i")], 3
-    )
-    pdf = out.toPandas()
-    assert (pdf.groupby("grp").size() == 3).all()
-    assert set(pdf[pdf.grp == 1].score) == {14, 13, 12}
-
-
-def test_topk_k_larger_than_group(spark):
-    df = spark.createDataFrame([(1, 1)], "grp int, score int")
-    assert topk_per_group(df, ["grp"], [F.col("score")], 10).count() == 1
 
 
 # ---------------------------------------------------------------- dedup

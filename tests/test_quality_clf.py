@@ -30,6 +30,7 @@ from etl_tpch_spark.pipeline.quality_clf import (
     class_counts,
     doc_features,
     score_with_weights,
+    score_with_weights_auto,
     train_logreg,
     train_logreg_driver,
     training_frame,
@@ -318,19 +319,50 @@ def test_join_twin_query_matches_indexed(spark, sf_dir):
     assert base == twin
 
 
+def _gate_quality(docs, w) -> dict:
+    """Precision/recall of keep = (score_q >= 0) against the in-domain
+    label, plus the per-class mean scores, in one aggregate over the
+    scored corpus.  Features hash at the model's own bucket count
+    (len(w) - 1), exactly as the persisted artifact scores."""
+    is_pos, keep = F.col("is_pos"), F.col("score_q") >= 0
+    count = lambda cond: F.sum(F.when(cond, 1).otherwise(0))  # noqa: E731
+    r = (
+        score_with_weights_auto(doc_features(docs, len(w) - 1), w)
+        .join(
+            docs.select(
+                "doc_id", (F.col("source") == CLF_REF_SOURCE).alias("is_pos")
+            ),
+            "doc_id",
+        )
+        .agg(
+            count(is_pos & keep).alias("tp"),
+            count(~is_pos & keep).alias("fp"),
+            count(is_pos & ~keep).alias("fn"),
+            F.avg(F.when(is_pos, F.col("score_q"))).alias("pos_mean"),
+            F.avg(F.when(~is_pos, F.col("score_q"))).alias("neg_mean"),
+        )
+        .first()
+    )
+    tp, fp, fn = r["tp"], r["fp"], r["fn"]
+    return {
+        "precision": tp / (tp + fp) if tp + fp else None,
+        "recall": tp / (tp + fn) if tp + fn else None,
+        "pos_mean_score": r["pos_mean"],
+        "neg_mean_score": r["neg_mean"],
+    }
+
+
 @pytest.mark.slow
 def test_separation_and_gate_quality_sf01():
     """The separation gate pinned at sf0.1 (VERDICT r8 #8), with the
     keep-floor quality floors taken from the measured K-sweep
-    (tools/bench_clf_quality.py, SCALING.md "Classifier quality at the
-    keep floor"): at K=4 the gate measured precision 0.172 (3.4x the
-    5% base rate) and recall 0.664 — pinned here with head-room so the
-    test fails on a real separation regression, not on fixture
-    jitter.  Runs against the fixed sf0.1 corpus regardless of the
+    (SCALING.md "Classifier quality at the keep floor"): at K=4 the
+    gate measured precision 0.172 (3.4x the 5% base rate) and recall
+    0.664 — pinned here with head-room so the test fails on a real
+    separation regression, not on fixture jitter.  Runs against the fixed sf0.1 corpus regardless of the
     suite's SF (that is the point: the sf0.001/sf0.01 pins already
     ride the default suite via the sf_dir fixture)."""
     from etl_tpch_spark.session import get_spark
-    from tools.bench_clf_quality import gate_quality
 
     spark = get_spark("etl_tpch_spark-tests")
     sf01 = "/root/testdata/sf0.1"
@@ -339,7 +371,7 @@ def test_separation_and_gate_quality_sf01():
     n_pos, n_neg = class_counts(feat_lab)
     w = train_logreg(spark, feat_lab, n_pos, n_neg, CLF_ROUNDS)
 
-    q = gate_quality(spark, docs, w)
+    q = _gate_quality(docs, w)
     assert q["pos_mean_score"] > 0 > q["neg_mean_score"]
     base_rate = n_pos / (n_pos + n_neg)
     assert q["precision"] > 2 * base_rate  # measured 3.4x

@@ -70,7 +70,7 @@ def test_ingest_replay_and_crash_window(spark, sf_dir, tmp_path):
     """Exactly-once across TWO tables: a full replay no-ops both
     appends, and a crash that landed doclens but not postings
     completes on replay (the landed half no-ops, the missing half
-    lands) — the stream_apply_cdc two-commit pattern."""
+    lands)."""
     docs = load_table(spark, sf_dir, "documents")
     half = docs.filter(F.col("doc_id") % 2 == 0)
     idx = SearchIndex(str(tmp_path / "inv"))
