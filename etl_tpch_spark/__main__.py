@@ -273,10 +273,13 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "dashboard":
         import os
 
+        from .pipeline.reduce import SEGMENTS
         from .pipeline.serving import format_for_display
         from .pipeline.workflow import results_ready
 
-        results = os.path.join(args.root, "results")
+        # one generation for the whole render: a reduce that publishes
+        # meanwhile flips the link, not the files read here
+        results = os.path.realpath(os.path.join(args.root, "results"))
         if not results_ready(results):
             # reference pipeline/dashboard.py:24-32: wait-for-results
             # health check; here we report instead of blocking
@@ -284,9 +287,8 @@ def main(argv: list[str] | None = None) -> int:
                   file=sys.stderr)
             return 1
         spark = get_spark("etl_tpch_spark-cli")
-        for entry in sorted(os.listdir(results)):
-            seg_path = os.path.join(results, entry)
-            seg = entry.split(".")[0].upper()
+        for seg in SEGMENTS:
+            seg_path = os.path.join(results, f"{seg.lower()}.snappy.parquet")
             print(f"=== {seg} — top unshipped orders by revenue ===")
             format_for_display(spark.read.parquet(seg_path)).show(
                 args.limit, truncate=False

@@ -27,11 +27,15 @@ in.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from ..schemas import LIVE
 
 SEGMENTS = ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
 
@@ -120,20 +124,28 @@ def query_reduce(
     Returns {segment: result_path}, keyed by the caller's spelling.
 
     One pass ranks every segment: the orders⋈lineitem join and the
-    revenue aggregate run once, not once per segment.  The ranked rows
-    (at most k per segment) are materialized, then each segment is
-    written with its rows in rank order — the same path, single part
-    file, columns, dtypes and row order as the reference's per-segment
-    query, so the dashboard and ``results_ready`` read it unchanged.
-    The five files are kept because they are the reference's gold
-    contract: one served result per segment.
+    revenue aggregate run once, not once per segment.  The tables are
+    read with the schemas the ingest stream writes (``schemas.LIVE``),
+    so no job infers them.  One write stores the ranked rows (at most
+    k per segment), partitioned by segment, each segment's rows in
+    rank order in a single part file — the same part-file count,
+    columns, dtypes and row order as the reference's per-segment
+    query.  A segment with no rows gets a schema-bearing empty part
+    file from one more small write.  The five files are kept because
+    they are the reference's gold contract: one served result per
+    segment.
 
-    All segments are ranked before the first gold file is overwritten,
-    so a failure in the join (a missing or unreadable table) leaves
-    every previous gold file intact rather than a mix of ticks.  The
-    materialized rows are released before returning.
+    The rows land in a new generation directory beside the gold zone,
+    ``.results-<uuid>/``, which :func:`_flip` makes current by
+    pointing the ``results`` symlink at it: a reader that resolves the
+    link once sees all five segments of one tick, never a mix, a
+    missing segment or a half-written file.  The replaced generation
+    is kept, so such a reader survives one more publish; older ones
+    are deleted.  A failure before the flip (a missing or unreadable
+    table, a failed write) deletes the new generation and leaves the
+    previous gold untouched.  One reducer at a time per gold zone.
     """
-    load = lambda t: spark.read.parquet(  # noqa: E731
+    load = lambda t: spark.read.schema(LIVE[t]).parquet(  # noqa: E731
         os.path.join(processed_dir, t)
     )
     per_segment = W.partitionBy("c_mktsegment").orderBy(
@@ -146,24 +158,77 @@ def query_reduce(
         )
         .withColumn("rnk", F.row_number().over(per_segment))
         .filter(F.col("rnk") <= k)
-        .cache()
     )
+    link = os.path.abspath(results_dir)
+    parent, name = os.path.split(link)
+    gen = os.path.join(parent, f".{name}-{uuid.uuid4().hex}")
     try:
-        ranked.count()  # every segment ranked before any file is touched
-        out: dict[str, str] = {}
+        # ≤ 5·k rows → one task, one part file per segment directory
+        # (reduce.py:76-78); snappy is Spark's default parquet codec.
+        (
+            ranked.repartition(1)
+            .sortWithinPartitions("c_mktsegment", "rnk")
+            .drop("rnk")
+            .write.partitionBy("c_mktsegment")
+            .parquet(gen)
+        )
+        os.remove(os.path.join(gen, "_SUCCESS"))
+        empty = []
         for seg in segments:
-            path = os.path.join(results_dir, f"{seg.lower()}.snappy.parquet")
-            # ≤ k rows → one file, like the reference's single parquet
-            # (reduce.py:76-78); snappy is Spark's default parquet codec.
-            (
-                ranked.filter(F.col("c_mktsegment") == seg.upper())
-                .coalesce(1)
-                .sortWithinPartitions("rnk")
-                .drop("c_mktsegment", "rnk")
-                .write.mode("overwrite")
-                .parquet(path)
-            )
-            out[seg] = path
-    finally:
-        ranked.unpersist()
-    return out
+            part = os.path.join(gen, f"c_mktsegment={seg.upper()}")
+            dst = os.path.join(gen, f"{seg.lower()}.snappy.parquet")
+            if os.path.isdir(part):
+                os.rename(part, dst)
+                open(os.path.join(dst, "_SUCCESS"), "w").close()
+            else:
+                empty.append(dst)
+        if empty:  # partitionBy writes nothing for a segment with no rows
+            ranked.limit(0).drop("c_mktsegment", "rnk").coalesce(1) \
+                .write.parquet(empty[0])
+            for dst in empty[1:]:
+                shutil.copytree(empty[0], dst)
+        previous = _flip(gen, link)
+    except BaseException:
+        shutil.rmtree(gen, ignore_errors=True)
+        raise
+    # keep the replaced generation for readers that resolved the link
+    # before the flip; delete the older ones
+    keep = {os.path.basename(gen), previous}
+    for entry in os.listdir(parent):
+        if entry.startswith(f".{name}-") and entry not in keep:
+            shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+    return {
+        seg: os.path.join(results_dir, f"{seg.lower()}.snappy.parquet")
+        for seg in segments
+    }
+
+
+def _flip(gen: str, link: str) -> str | None:
+    """Atomically point the symlink ``link`` at generation ``gen``: a
+    new symlink renamed over the old one, so a reader resolves either
+    the old generation or the new one, never neither.  Returns the
+    name of the generation it replaced.  A real directory at ``link``
+    (gold written before publishing by symlink) is first moved aside
+    as that previous generation, and moved back if the flip fails.
+    POSIX only: it relies on rename(2) replacing a symlink atomically."""
+    parent, name = os.path.split(link)
+    moved = None
+    if os.path.islink(link):
+        previous = os.path.basename(os.readlink(link))
+    elif os.path.isdir(link):
+        previous = f".{name}-{uuid.uuid4().hex}"
+        moved = os.path.join(parent, previous)
+        os.rename(link, moved)
+    else:
+        previous = None
+    tmp = os.path.join(parent, f".{name}.link-{uuid.uuid4().hex}")
+    # a relative target, so the lake root can be moved or copied
+    os.symlink(os.path.basename(gen), tmp)
+    try:
+        os.replace(tmp, link)
+    except BaseException:
+        os.remove(tmp)
+        if moved and not os.path.lexists(link):
+            os.rename(moved, link)
+        raise
+    return previous

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .reduce import SEGMENTS
+
 
 def format_for_display(results: DataFrame) -> DataFrame:
     """reference dashboard.py:40-56 ``prepare_data``: order key
@@ -65,13 +67,13 @@ def render_dashboard_html(
     import html
     import os
 
+    gen = os.path.realpath(results_dir)  # one generation for the page
     sections = []
     nav = []
-    for entry in sorted(os.listdir(results_dir)):
-        seg_path = os.path.join(results_dir, entry)
+    for seg in (s.lower() for s in SEGMENTS):
+        seg_path = os.path.join(gen, f"{seg}.snappy.parquet")
         if not os.path.isdir(seg_path):
             continue
-        seg = entry.split(".")[0]
         rows = (
             format_for_display(spark.read.parquet(seg_path))
             .limit(limit)

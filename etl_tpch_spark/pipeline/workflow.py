@@ -22,10 +22,11 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
+from ..schemas import LIVE
 from .compact import compact_all
 from .generate import incrementalize
 from .ingest import ingest_all
-from .reduce import query_reduce
+from .reduce import SEGMENTS, query_reduce
 
 
 def run_cycle(
@@ -77,7 +78,7 @@ def run_cycle(
 
         orders_path = os.path.join(processed, "orders")
         if os.path.exists(orders_path):
-            odf = spark.read.parquet(orders_path)
+            odf = spark.read.schema(LIVE["orders"]).parquet(orders_path)
             report = run_expectations(
                 [
                     check_not_null(odf, "o_orderkey"),
@@ -146,16 +147,16 @@ def serve_loop(
 
 
 def results_ready(
-    results_dir: str,
-    segments: tuple[str, ...] = (
-        "AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY",
-    ),
+    results_dir: str, segments: tuple[str, ...] = SEGMENTS
 ) -> bool:
     """Health check ≙ the reference's dashboard flow (dashboard.py:24-32
     waits until all 5 segment result files exist): True once every
-    segment's gold parquet is present and non-empty."""
+    segment's gold parquet is present and non-empty.  The gold zone is
+    resolved once (``results`` is a symlink that each reduce flips to a
+    new generation), so every segment is checked in the same one."""
+    gen = os.path.realpath(results_dir)
     for seg in segments:
-        path = os.path.join(results_dir, f"{seg.lower()}.snappy.parquet")
+        path = os.path.join(gen, f"{seg.lower()}.snappy.parquet")
         if not os.path.isdir(path):
             return False
         if not any(f.endswith(".parquet") for f in os.listdir(path)):

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -104,13 +105,32 @@ def stream_ingest_all(
     tables: tuple[str, ...] = ALL_TABLES,
 ) -> dict[str, StreamingQuery]:
     """One AvailableNow drain per staged table (flow ``json_to_parquet``,
-    preprocess.py:53-59, minus its locks and retries)."""
+    preprocess.py:53-59, minus its locks and retries).
+
+    Every table's query starts before any is awaited, so the drains'
+    start-up, planning and commit latencies overlap instead of adding
+    up; each table still has its own source, sink and checkpoint.  A
+    drain that fails to start or to run does not stop the others: the
+    first failure is raised once every started drain has finished, so
+    no query is left running."""
     out: dict[str, StreamingQuery] = {}
+    failures: list[Exception] = []
     for t in tables:
         if list_staged_files(staging_dir, t):
-            out[t] = stream_ingest_table(
-                spark, staging_dir, processed_dir, checkpoint_dir, t
-            )
+            try:
+                out[t] = stream_ingest_table(
+                    spark, staging_dir, processed_dir, checkpoint_dir, t,
+                    await_termination=False,
+                )
+            except Exception as exc:  # e.g. an unwritable sink; raised below
+                failures.append(exc)
+    for q in out.values():
+        try:
+            q.awaitTermination()
+        except StreamingQueryException as exc:
+            failures.append(exc)
+    if failures:
+        raise failures[0]
     return out
 
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import uuid
 from datetime import datetime, timedelta
 
@@ -303,8 +304,8 @@ def _jobs_in_group(spark, fn) -> int:
 
 def test_reduce_one_pass_job_shape_and_release(spark, lake, tmp_path):
     """A warm one-pass reduce runs fewer Spark jobs than the five
-    per-segment pipelines on the same lake, and leaves no persisted
-    RDD behind."""
+    per-segment pipelines on the same lake — exactly 6 — and leaves no
+    persisted RDD behind."""
     ref = str(tmp_path / "ref")
 
     def per_segment():
@@ -325,6 +326,10 @@ def test_reduce_one_pass_job_shape_and_release(spark, lake, tmp_path):
     assert set(jsc.getPersistentRDDs().keys()) <= before
     n_per_segment = _jobs_in_group(spark, per_segment)
     assert 0 < n_one_pass < n_per_segment
+    # one ranking pass and one partitioned write over declared schemas;
+    # schema inference per table, a cache + count and one write per
+    # segment took 15 jobs here
+    assert n_one_pass == 6
 
 
 def _gold_rows(spark, results):
@@ -360,6 +365,104 @@ def test_reduce_failure_keeps_previous_gold(spark, tmp_path):
         query_reduce(spark, os.path.join(root, "processed"), results,
                      cutoff=NOW, k=5)
     assert results_ready(results) and _gold_rows(spark, results) == old
+
+
+# --- atomic gold publish: ``results`` -> ``.results-<uuid>`` ------------
+
+def _generations(results):
+    parent = os.path.dirname(results)
+    return sorted(e for e in os.listdir(parent) if e.startswith(".results-"))
+
+
+def test_publish_reader_never_sees_partial_gold(spark, lake, tmp_path):
+    """A reader that resolves the gold zone once per poll and reads all
+    five segments from that generation never sees a missing segment,
+    a partial one or a read error while 20 reduces publish."""
+    results = str(tmp_path / "results")
+    paths = query_reduce(spark, lake, results, cutoff=LAKE_CUTOFF, k=5)
+    want = {seg: pd.read_parquet(p) for seg, p in paths.items()}
+    assert all(len(df) == 5 for df in want.values())
+    stop, problems, polls = threading.Event(), [], [0]
+
+    def reader():
+        while not stop.is_set():
+            try:
+                if not results_ready(results):
+                    problems.append("not ready")
+                    continue
+                gen = os.path.realpath(results)
+                for seg in SEGMENTS:
+                    got = pd.read_parquet(os.path.join(
+                        gen, f"{seg.lower()}.snappy.parquet"))
+                    if not got.equals(want[seg]):
+                        problems.append(f"{seg}: {len(got)} rows differ")
+                polls[0] += 1
+            except Exception as exc:  # every read error is a finding
+                problems.append(repr(exc))
+
+    t = threading.Thread(target=reader, daemon=True)
+    t.start()
+    try:
+        for _ in range(19):
+            query_reduce(spark, lake, results, cutoff=LAKE_CUTOFF, k=5)
+    finally:
+        stop.set()
+        t.join(timeout=60)
+    assert not t.is_alive()
+    assert polls[0] > 0 and problems == []
+    assert os.path.islink(results) and len(_generations(results)) == 2
+
+
+def test_publish_fault_before_flip_keeps_previous_gold(
+    spark, lake, tmp_path, monkeypatch
+):
+    """A fault between the generation write and the symlink flip
+    leaves the previous gold readable and unchanged, and deletes the
+    new generation."""
+    results = str(tmp_path / "results")
+    query_reduce(spark, lake, results, cutoff=LAKE_CUTOFF, k=5)
+    old, gens = _gold_rows(spark, results), _generations(results)
+
+    def fail(*args, **kwargs):
+        raise OSError("fault before the flip")
+
+    monkeypatch.setattr(os, "replace", fail)
+    with pytest.raises(OSError, match="before the flip"):
+        query_reduce(spark, lake, results, cutoff=LAKE_CUTOFF, k=3)
+    monkeypatch.undo()
+    assert results_ready(results) and _gold_rows(spark, results) == old
+    assert _generations(results) == gens
+    assert sorted(os.listdir(tmp_path)) == [*gens, "results"]
+
+
+def test_publish_migrates_real_results_dir(spark, lake, tmp_path):
+    """A gold zone that is a real directory (written before publishing
+    by symlink) is moved aside on the first publish, kept as the
+    previous generation, and deleted by the next publish."""
+    results = str(tmp_path / "results")
+    os.makedirs(os.path.join(results, "automobile.snappy.parquet"))
+    query_reduce(spark, lake, results, cutoff=LAKE_CUTOFF, k=5)
+    assert os.path.islink(results) and results_ready(results)
+    current = os.path.basename(os.path.realpath(results))
+    (moved,) = set(_generations(results)) - {current}
+    assert os.listdir(tmp_path / moved) == ["automobile.snappy.parquet"]
+    query_reduce(spark, lake, results, cutoff=LAKE_CUTOFF, k=5)
+    assert _generations(results) == sorted(
+        [current, os.path.basename(os.path.realpath(results))])
+
+
+def test_publish_keeps_at_most_two_generations(spark, lake, tmp_path):
+    """Each publish keeps the new generation and the one it replaced;
+    older generations are deleted."""
+    results = str(tmp_path / "results")
+    previous = None
+    for n in range(1, 5):
+        query_reduce(spark, lake, results, cutoff=LAKE_CUTOFF, k=5)
+        current = os.path.basename(os.path.realpath(results))
+        assert _generations(results) == sorted(
+            g for g in (current, previous) if g)
+        assert len(_generations(results)) == min(n, 2)
+        previous = current
 
 
 @pytest.mark.slow

@@ -6,19 +6,23 @@ All checkpoints live in pytest tmpdirs (SURVEY.md §7 risk e).
 
 from __future__ import annotations
 
+import json
 import os
 from datetime import datetime
 
 import pytest
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from etl_tpch_spark.catalog import load_table
 from etl_tpch_spark.pipeline import incrementalize, list_staged_files
+from etl_tpch_spark.pipeline.ingest import ALL_TABLES
 from etl_tpch_spark.streaming import (
     running_user_stats,
     session_window_stats,
     sliding_window_avg,
+    stream_ingest_all,
     stream_ingest_table,
     streaming_events_source,
     tumbling_window_counts,
@@ -69,6 +73,69 @@ def test_stream_ingest_exactly_once(spark, tmp_path_factory):
     )
     stream_ingest_table(spark, staging, processed, ckpt, "orders")
     assert spark.read.parquet(out).count() == 2 * n_orders
+
+
+def test_stream_ingest_all_failure_waits_for_other_drains(spark, tmp_path):
+    """A drain whose sink cannot be written fails the call (at start,
+    when the sink's log cannot be created), but only after the other
+    table's drain has committed; no query is left running."""
+    staging, processed, ckpt = (
+        str(tmp_path / z) for z in ("staging", "processed", "ckpt")
+    )
+    incrementalize(spark, TEST_SF_DIR, staging, now=NOW, key_fn="hash")
+    os.makedirs(processed)
+    open(os.path.join(processed, "orders"), "w").close()  # not a dir
+    with pytest.raises(Py4JJavaError, match="orders"):
+        stream_ingest_all(spark, staging, processed, ckpt,
+                          tables=("orders", "lineitem"))
+    assert spark.streams.active == []
+    assert os.path.isfile(os.path.join(ckpt, "lineitem", "commits", "0"))
+    n_line = spark.read.json(list_staged_files(staging, "lineitem")).count()
+    assert spark.read.parquet(
+        os.path.join(processed, "lineitem")).count() == n_line
+
+
+def _offsets(ckpt, table):
+    """Per batch: the source offsets (metadata line dropped) and the
+    staged files the source consumed."""
+    out = {}
+    for d in ("offsets", os.path.join("sources", "0")):
+        path = os.path.join(ckpt, table, d)
+        for name in sorted(os.listdir(path)):
+            if name.startswith("."):  # checksum files
+                continue
+            with open(os.path.join(path, name)) as f:
+                lines = f.read().splitlines()
+            entries = lines[2:] if d == "offsets" else sorted(
+                json.loads(x)["path"] for x in lines[1:])
+            out[(d, name)] = entries
+    return out
+
+
+def test_stream_ingest_all_equals_one_table_at_a_time(spark, tmp_path):
+    """Concurrent drains ingest exactly what one-at-a-time drains of
+    the same staging do: per-table row counts and checkpoint offsets."""
+    staging = str(tmp_path / "staging")
+    for now in (NOW, datetime(2026, 2, 1, 9, 15)):  # orders: 2 batches
+        incrementalize(spark, TEST_SF_DIR, staging, now=now, key_fn="hash")
+    together, alone = (
+        {z: str(tmp_path / side / z) for z in ("processed", "ckpt")}
+        for side in ("together", "alone")
+    )
+    drained = stream_ingest_all(
+        spark, staging, together["processed"], together["ckpt"])
+    tables = [t for t in ALL_TABLES if list_staged_files(staging, t)]
+    assert sorted(drained) == sorted(tables) and len(tables) == 7
+    for t in tables:
+        stream_ingest_table(
+            spark, staging, alone["processed"], alone["ckpt"], t)
+    for t in tables:
+        counts = [
+            spark.read.parquet(os.path.join(z["processed"], t)).count()
+            for z in (together, alone)
+        ]
+        assert counts[0] == counts[1] > 0, t
+        assert _offsets(together["ckpt"], t) == _offsets(alone["ckpt"], t)
 
 
 @pytest.mark.parametrize(
