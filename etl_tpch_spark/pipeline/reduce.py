@@ -18,10 +18,12 @@ filtered customer dim (keeping ``c_mktsegment``), shuffle-join the two
 pre-filtered facts, aggregate revenue per (segment, order).
 :func:`unshipped_orders_live` takes one segment's top k from it
 (TakeOrderedAndProject); :func:`query_reduce` ranks every segment in
-the same pass with a ``row_number`` window and then writes the five
-gold files.  The cutoff is an explicit parameter; the reference's
-``pd.Timestamp.now()`` (reduce.py:56) is the caller's choice, not baked
-in.
+the same pass with a ``row_number`` window, writes the five gold files
+in one partitioned write to a new generation directory and publishes
+it by flipping the ``results`` symlink (:func:`_flip`), so readers
+never see a partial gold zone.  The cutoff is an explicit parameter;
+the reference's ``pd.Timestamp.now()`` (reduce.py:56) is the caller's
+choice, not baked in.
 """
 
 from __future__ import annotations

@@ -11,7 +11,12 @@ every stage; per-stage booleans reproduce the differing cadences
 
 The streaming variant of ingest (exactly-once, no consume-and-delete)
 is used when a checkpoint dir is supplied; otherwise the batch path
-mirrors the reference's delete-after-write.
+mirrors the reference's delete-after-write.  The streaming drains of
+one tick run concurrently, the quality gate and the reduce read the
+tables with their declared schemas, and the reduce publishes the gold
+zone atomically: ``results`` is a symlink to the current
+``.results-<uuid>`` generation (POSIX filesystems), which
+:func:`results_ready` and the dashboards resolve once per read.
 """
 
 from __future__ import annotations
@@ -45,8 +50,9 @@ def run_cycle(
     k: int = 50,
 ) -> dict[str, Any]:
     """Run one micro-batch tick over the medallion zones rooted at
-    ``root_dir`` (staging/ processed/ results/ checkpoints/).  Returns a
-    stage → outcome summary."""
+    ``root_dir`` (staging/ processed/ results/ checkpoints/; results is
+    a symlink to the current gold generation).  Returns a stage →
+    outcome summary."""
     staging = os.path.join(root_dir, "staging")
     processed = os.path.join(root_dir, "processed")
     results = os.path.join(root_dir, "results")

@@ -15,9 +15,11 @@ checkpointed Structured Streaming file source (SURVEY.md §3.2, T3):
   15-min Prefect deployment (T1); a ``processingTime`` trigger turns the
   same code into an always-on stream.
 
-At scale: one stream per table; ``maxFilesPerTrigger`` bounds per-batch
-work so a backlog spike cannot OOM an executor; the sink append is
-partition-parallel like any batch write.
+At scale: one stream per table, and :func:`stream_ingest_all` runs
+the tables' drains concurrently (each with its own checkpoint, so a
+table's offsets do not depend on the others'); ``maxFilesPerTrigger``
+bounds per-batch work so a backlog spike cannot OOM an executor; the
+sink append is partition-parallel like any batch write.
 """
 
 from __future__ import annotations

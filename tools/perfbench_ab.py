@@ -122,12 +122,13 @@ def main(argv=None) -> int:
                 for side in order:
                     res = run_once(sides[side], workload, seed,
                                    args.seconds, args.trace)
-                    results[side].append(res)
-                    ok = res.get("correct") and not res.get("failed")
-                    bad += not ok
+                    values = {m: v["value"]
+                              for m, v in res.get("metrics", {}).items()}
+                    results[side].append(values)
+                    bad += not (res.get("correct") and not res.get("failed"))
+                    shown = {m: round(v, 4) for m, v in values.items()}
                     print(f"{workload} pair {i} seed {seed} {side}: "
-                          f"{json.dumps(res.get('metrics', res))}",
-                          flush=True)
+                          f"{shown or res}", flush=True)
                     if out:
                         out.write(json.dumps({
                             "workload": workload, "pair": i, "seed": seed,
@@ -135,13 +136,10 @@ def main(argv=None) -> int:
                         }) + "\n")
                         out.flush()
             print(f"{workload}: {args.pairs} pairs, trace {args.trace}")
-            metrics = sorted(set().union(*(
-                r.get("metrics", {}) for r in results["base"])))
-            for m in metrics:
-                pairs = [(b["metrics"][m], c["metrics"][m])
+            for m in sorted(set().union(*results["base"])):
+                pairs = [(b[m], c[m])
                          for b, c in zip(results["base"], results["change"])
-                         if m in b.get("metrics", {})
-                         and m in c.get("metrics", {})]
+                         if m in b and m in c]
                 if pairs:
                     print(summarize(m, better.get(m, "lower"),
                                     *map(list, zip(*pairs))))
