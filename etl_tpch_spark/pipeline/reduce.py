@@ -146,6 +146,9 @@ def query_reduce(
     are deleted.  A failure before the flip (a missing or unreadable
     table, a failed write) deletes the new generation and leaves the
     previous gold untouched.  One reducer at a time per gold zone.
+    A generation holds exactly ``segments``: a call with fewer than
+    the five replaces the whole gold zone, and ``results_ready`` then
+    reports it incomplete.
     """
     load = lambda t: spark.read.schema(LIVE[t]).parquet(  # noqa: E731
         os.path.join(processed_dir, t)
@@ -185,8 +188,12 @@ def query_reduce(
             else:
                 empty.append(dst)
         if empty:  # partitionBy writes nothing for a segment with no rows
-            ranked.limit(0).drop("c_mktsegment", "rnk").coalesce(1) \
+            (
+                ranked.limit(0)
+                .drop("c_mktsegment", "rnk")
+                .coalesce(1)
                 .write.parquet(empty[0])
+            )
             for dst in empty[1:]:
                 shutil.copytree(empty[0], dst)
         previous = _flip(gen, link)
