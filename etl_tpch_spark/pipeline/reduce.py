@@ -146,10 +146,14 @@ def query_reduce(
     are deleted.  A failure before the flip (a missing or unreadable
     table, a failed write) deletes the new generation and leaves the
     previous gold untouched.  One reducer at a time per gold zone.
-    A generation holds exactly ``segments``: a call with fewer than
-    the five replaces the whole gold zone, and ``results_ready`` then
-    reports it incomplete.
+    A generation replaces the whole gold zone, so ``segments`` must
+    name the five segments (any spelling, any order); anything else
+    raises ``ValueError`` before a job runs.
     """
+    if sorted(s.upper() for s in segments) != sorted(SEGMENTS):
+        raise ValueError(
+            f"query_reduce publishes all of {SEGMENTS}, got {segments}"
+        )
     load = lambda t: spark.read.schema(LIVE[t]).parquet(  # noqa: E731
         os.path.join(processed_dir, t)
     )
@@ -217,23 +221,24 @@ def _flip(gen: str, link: str) -> str | None:
     new symlink renamed over the old one, so a reader resolves either
     the old generation or the new one, never neither.  Returns the
     name of the generation it replaced.  A real directory at ``link``
-    (gold written before publishing by symlink) is first moved aside
-    as that previous generation, and moved back if the flip fails.
+    (gold written before publishing by symlink) is moved aside as that
+    previous generation once the new symlink exists, and moved back if
+    the rename fails.
     POSIX only: it relies on rename(2) replacing a symlink atomically."""
     parent, name = os.path.split(link)
-    moved = None
-    if os.path.islink(link):
-        previous = os.path.basename(os.readlink(link))
-    elif os.path.isdir(link):
-        previous = f".{name}-{uuid.uuid4().hex}"
-        moved = os.path.join(parent, previous)
-        os.rename(link, moved)
-    else:
-        previous = None
     tmp = os.path.join(parent, f".{name}.link-{uuid.uuid4().hex}")
     # a relative target, so the lake root can be moved or copied
     os.symlink(os.path.basename(gen), tmp)
+    moved = None
     try:
+        if os.path.islink(link):
+            previous = os.path.basename(os.readlink(link))
+        elif os.path.isdir(link):
+            previous = f".{name}-{uuid.uuid4().hex}"
+            moved = os.path.join(parent, previous)
+            os.rename(link, moved)
+        else:
+            previous = None
         os.replace(tmp, link)
     except BaseException:
         os.remove(tmp)

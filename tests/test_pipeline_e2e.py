@@ -435,12 +435,27 @@ def test_publish_fault_before_flip_keeps_previous_gold(
     assert sorted(os.listdir(tmp_path)) == [*gens, "results"]
 
 
-def test_publish_migrates_real_results_dir(spark, lake, tmp_path):
+def test_publish_migrates_real_results_dir(
+    spark, lake, tmp_path, monkeypatch
+):
     """A gold zone that is a real directory (written before publishing
     by symlink) is moved aside on the first publish, kept as the
-    previous generation, and deleted by the next publish."""
+    previous generation, and deleted by the next publish.  A publish
+    that fails to make its symlink leaves that directory in place."""
     results = str(tmp_path / "results")
     os.makedirs(os.path.join(results, "automobile.snappy.parquet"))
+
+    def fail(*args, **kwargs):
+        raise OSError("no symlinks here")
+
+    monkeypatch.setattr(os, "symlink", fail)
+    with pytest.raises(OSError, match="no symlinks"):
+        query_reduce(spark, lake, results, cutoff=LAKE_CUTOFF, k=5)
+    monkeypatch.undo()
+    assert not os.path.islink(results)
+    assert os.listdir(results) == ["automobile.snappy.parquet"]
+    assert os.listdir(tmp_path) == ["results"]
+
     query_reduce(spark, lake, results, cutoff=LAKE_CUTOFF, k=5)
     assert os.path.islink(results) and results_ready(results)
     current = os.path.basename(os.path.realpath(results))
@@ -449,6 +464,21 @@ def test_publish_migrates_real_results_dir(spark, lake, tmp_path):
     query_reduce(spark, lake, results, cutoff=LAKE_CUTOFF, k=5)
     assert _generations(results) == sorted(
         [current, os.path.basename(os.path.realpath(results))])
+
+
+def test_reduce_rejects_a_segment_subset(spark, lake, tmp_path):
+    """A generation replaces the whole gold zone, so a call naming
+    fewer than the five segments is refused and the served gold stays
+    as it was."""
+    results = str(tmp_path / "results")
+    query_reduce(spark, lake, results, cutoff=LAKE_CUTOFF, k=5)
+    old, gens = _gold_rows(spark, results), _generations(results)
+    for segments in (SEGMENTS[:2], (*SEGMENTS, "AUTOMOBILE")):
+        with pytest.raises(ValueError, match="publishes all of"):
+            query_reduce(spark, lake, results, cutoff=LAKE_CUTOFF, k=3,
+                         segments=segments)
+    assert results_ready(results) and _gold_rows(spark, results) == old
+    assert _generations(results) == gens
 
 
 def test_publish_keeps_at_most_two_generations(spark, lake, tmp_path):

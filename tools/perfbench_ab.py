@@ -1,16 +1,18 @@
 """Paired A/B runs of the benchmark: a base commit against this checkout.
 
     python3 tools/perfbench_ab.py --base <commit> [--workload NAME ...]
-        [--pairs 10] [--seconds N] [--seed 1] [--trace 0] [--out FILE]
+        [--pairs 10] [--seed 1] [--out FILE]
 
 The base commit is exported with ``git archive`` into a temporary
 directory (deleted afterwards); the change is this checkout's working
 tree.  For each workload the script runs ``--pairs`` pairs of
 ``perfbench/run.py``, one run on each side with the same seed (``--seed``,
 ``--seed`` + 1, ...), alternating which side runs first, so drift of
-the machine during the session falls on both sides alike.  Runs are
-sequential: each one is a fresh worker with its own private
-directories (see ``perfbench/run.py``).
+the machine during the session falls on both sides alike.  Every run
+is untraced and lasts ``BENCHMARK.json``'s ``run_seconds``, as the
+benchmark runs both commits.  Runs are sequential: each one is a
+fresh worker with its own private directories (see
+``perfbench/run.py``).
 
 It prints one line per run, then per workload and metric: each side's
 median and quartiles, the pairs the change won (ties count for
@@ -48,14 +50,13 @@ def export_commit(commit: str, dest: str) -> None:
     subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
 
 
-def run_once(checkout: str, workload: str, seed: int, seconds: int,
-             trace: int) -> dict:
-    """One ``perfbench/run.py`` run in ``checkout``; its JSON result, or
-    ``{"correct": False, "error": ...}`` when it printed none."""
+def run_once(checkout: str, workload: str, seed: int, seconds: int) -> dict:
+    """One untraced ``perfbench/run.py`` run in ``checkout``; its JSON
+    result, or ``{"correct": False, "error": ...}`` when it printed
+    none."""
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds),
-         "--trace", str(trace)],
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
         cwd=checkout, capture_output=True, text=True,
     )
     lines = proc.stdout.strip().splitlines()
@@ -100,9 +101,7 @@ def main(argv=None) -> int:
                     choices=[w["name"] for w in bench["workloads"]],
                     help="repeatable; default every workload")
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seconds", type=int, default=bench["run_seconds"])
     ap.add_argument("--seed", type=int, default=1, help="first seed")
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--out", help="also write every run as a JSON line")
     args = ap.parse_args(argv)
     workloads = args.workload or [w["name"] for w in bench["workloads"]]
@@ -121,7 +120,7 @@ def main(argv=None) -> int:
                     "change", "base")
                 for side in order:
                     res = run_once(sides[side], workload, seed,
-                                   args.seconds, args.trace)
+                                   bench["run_seconds"])
                     values = {m: v["value"]
                               for m, v in res.get("metrics", {}).items()}
                     results[side].append(values)
@@ -135,7 +134,7 @@ def main(argv=None) -> int:
                             "side": side, "first": order[0], **res,
                         }) + "\n")
                         out.flush()
-            print(f"{workload}: {args.pairs} pairs, trace {args.trace}")
+            print(f"{workload}: {args.pairs} pairs")
             for m in sorted(set().union(*results["base"])):
                 pairs = [(b[m], c[m])
                          for b, c in zip(results["base"], results["change"])
