@@ -8,12 +8,16 @@ ingest on expectations (Delta Live Tables / Great Expectations shape):
 violations are *counted and reported*, and the caller decides whether
 to fail the pipeline, quarantine, or alert.
 
-Every check returns a one-row DataFrame ``(check_name, n_violations,
-passed)`` so a suite is a unionByName — Spark runs the checks as
-independent jobs (or one job when the optimizer shares the scan), and
-the report is itself a DataFrame to store/alert on.  At 100 TB each
-check is a scan + partial agg — no shuffles except the key checks
-(groupBy / anti join on the key)."""
+Every check returns a DataFrame of ``(check_name, n_violations,
+passed)`` rows, so a suite is a unionByName and the report is itself a
+DataFrame to store/alert on.  A union is not one pass: Spark plans each
+branch's scan and aggregate on its own, so a suite of n single-table
+checks scans the table n times.  :func:`check_key` is the one-pass
+form of the key checks a tick gate runs on a fact table: the nulls of
+the key, the nulls of other columns and the duplicated keys, all from
+one scan and one groupBy on the key.  At 100 TB each check is a scan +
+partial agg — no shuffles except the key checks (groupBy / anti join
+on the key)."""
 
 from __future__ import annotations
 
@@ -51,6 +55,38 @@ def check_unique(df: DataFrame, col: str) -> DataFrame:
     return dups.agg(
         _report(f"unique:{col}", F.count(F.lit(1))).alias("r")
     ).select("r.*")
+
+
+def check_key(
+    df: DataFrame, key: str, not_null: tuple[str, ...] = ()
+) -> DataFrame:
+    """``not_null:<key>``, ``not_null:<c>`` for each column ``c`` of
+    ``not_null`` and ``unique:<key>`` in one pass: one scan, a groupBy
+    on ``key`` that counts the rows and the non-null ``c`` of each key,
+    then one global aggregate over those groups.  The counts equal
+    :func:`check_not_null` and :func:`check_unique` row for row: the
+    null keys form one group, so several of them are also one
+    duplicated key, as in :func:`check_unique`'s groupBy."""
+    per_key = df.groupBy(key).agg(
+        F.count(F.lit(1)).alias("__n"),
+        *(F.count(c).alias(f"__nn{i}") for i, c in enumerate(not_null)),
+    )
+    n = F.col("__n")
+    total = lambda v: F.coalesce(F.sum(v), F.lit(0))  # noqa: E731
+    reports = [
+        _report(f"not_null:{key}", total(F.when(F.col(key).isNull(), n))),
+        *(
+            _report(f"not_null:{c}", total(n - F.col(f"__nn{i}")))
+            for i, c in enumerate(not_null)
+        ),
+        _report(f"unique:{key}", F.count(F.when(n > 1, 1))),
+    ]
+    return (
+        per_key.agg(*(r.alias(f"r{i}") for i, r in enumerate(reports)))
+        .select(F.explode(F.array(*(f"r{i}" for i in range(len(reports)))))
+                .alias("r"))
+        .select("r.*")
+    )
 
 
 def check_in_range(df: DataFrame, col: str, lo: float, hi: float) -> DataFrame:

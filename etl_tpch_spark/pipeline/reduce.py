@@ -14,8 +14,9 @@ Column naming is resolved at runtime so the same function also accepts
 testdata-named tables.
 
 One definition of the query, :func:`_unshipped_revenue`: broadcast the
-filtered customer dim (keeping ``c_mktsegment``), shuffle-join the two
-pre-filtered facts, aggregate revenue per (segment, order).
+filtered customer dim (keeping ``c_mktsegment``), sort-merge-join the
+two pre-filtered facts on the order key, aggregate revenue per
+(segment, order).
 :func:`unshipped_orders_live` takes one segment's top k from it
 (TakeOrderedAndProject); :func:`query_reduce` ranks every segment in
 the same pass with a ``row_number`` window, writes the five gold files
@@ -61,7 +62,18 @@ def _unshipped_revenue(
     filter, join and revenue aggregate.  Columns: ``c_mktsegment,
     l_orderkey, revenue, <order time>, o_orderpriority``.  An order has
     one customer, hence one segment, so each (segment, order) group
-    holds exactly the rows of that segment's own query."""
+    holds exactly the rows of that segment's own query.
+
+    The facts join by sort-merge on the order key, never by broadcast:
+    every live lineitem ships after the cutoff (ship times lie in
+    ``[now, now + 3 d]``), so the filtered lineitem is the whole fact
+    table, which grows every tick.  Broadcasting it collected it to
+    the driver once per call; the ``merge`` hint shuffles both facts
+    in parallel map stages, spills instead, and is the plan the lake
+    reaches anyway once lineitem outgrows the broadcast threshold.
+    The join's order-key partitioning also satisfies the aggregate,
+    whose keys include ``l_orderkey``, so no exchange sits between
+    them."""
     o_time = _col(orders, "o_order_time", "o_orderdate")
     l_time = _col(lineitem, "l_ship_time", "l_shipdate")
     cut = F.lit(cutoff).cast("timestamp")
@@ -72,8 +84,10 @@ def _unshipped_revenue(
     forders = orders.filter(F.col(o_time) < cut).select(
         "o_orderkey", "o_custkey", o_time, "o_orderpriority"
     )
-    fline = lineitem.filter(F.col(l_time) > cut).select(
-        "l_orderkey", "l_extendedprice", "l_discount"
+    fline = (
+        lineitem.filter(F.col(l_time) > cut)
+        .select("l_orderkey", "l_extendedprice", "l_discount")
+        .hint("merge")
     )
     return (
         forders.join(F.broadcast(fcust), forders.o_custkey == fcust.c_custkey)
@@ -109,6 +123,33 @@ def unshipped_orders_live(
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
         .limit(k)
         .drop("c_mktsegment")
+    )
+
+
+def _ranked(
+    spark: SparkSession,
+    processed_dir: str,
+    *,
+    segments: tuple[str, ...],
+    cutoff: datetime | str,
+    k: int,
+) -> DataFrame:
+    """The ranking pass of :func:`query_reduce`: each segment's top
+    ``k`` rows with their rank ``rnk``, over the live tables read with
+    the schemas the ingest stream writes (``schemas.LIVE``)."""
+    load = lambda t: spark.read.schema(LIVE[t]).parquet(  # noqa: E731
+        os.path.join(processed_dir, t)
+    )
+    per_segment = W.partitionBy("c_mktsegment").orderBy(
+        F.col("revenue").desc(), F.col("l_orderkey")
+    )
+    return (
+        _unshipped_revenue(
+            load("orders"), load("lineitem"), load("customer"),
+            segments=segments, cutoff=cutoff,
+        )
+        .withColumn("rnk", F.row_number().over(per_segment))
+        .filter(F.col("rnk") <= k)
     )
 
 
@@ -154,20 +195,8 @@ def query_reduce(
         raise ValueError(
             f"query_reduce publishes all of {SEGMENTS}, got {segments}"
         )
-    load = lambda t: spark.read.schema(LIVE[t]).parquet(  # noqa: E731
-        os.path.join(processed_dir, t)
-    )
-    per_segment = W.partitionBy("c_mktsegment").orderBy(
-        F.col("revenue").desc(), F.col("l_orderkey")
-    )
-    ranked = (
-        _unshipped_revenue(
-            load("orders"), load("lineitem"), load("customer"),
-            segments=segments, cutoff=cutoff,
-        )
-        .withColumn("rnk", F.row_number().over(per_segment))
-        .filter(F.col("rnk") <= k)
-    )
+    ranked = _ranked(spark, processed_dir, segments=segments,
+                     cutoff=cutoff, k=k)
     link = os.path.abspath(results_dir)
     parent, name = os.path.split(link)
     gen = os.path.join(parent, f".{name}-{uuid.uuid4().hex}")

@@ -17,6 +17,12 @@ tables with their declared schemas, and the reduce publishes the gold
 zone atomically: ``results`` is a symlink to the current
 ``.results-<uuid>`` generation (POSIX filesystems), which
 :func:`results_ready` and the dashboards resolve once per read.
+
+The quality gate is one pass over ``orders`` (``quality.check_key``)
+and runs beside the reduce: a failed expectation is reported, never
+blocks the publish, so nothing waits on the gate until the tick
+ends.  Compaction runs first, so the gate never reads a table whose
+directory is being swapped.
 """
 
 from __future__ import annotations
@@ -26,6 +32,7 @@ from datetime import datetime, timezone
 from typing import Any
 
 from pyspark.sql import SparkSession
+from pyspark.util import InheritableThread
 
 from ..schemas import LIVE
 from .compact import compact_all
@@ -77,31 +84,58 @@ def run_cycle(
             out["ingest"] = ingest_all(
                 spark, staging, processed, delete_after=True
             )
-    if quality_gate:
-        # post-ingest expectations on the dynamic tables (DLT-style:
-        # a failed expectation is reported, the caller decides policy)
-        from .quality import check_not_null, check_unique, run_expectations
-
-        orders_path = os.path.join(processed, "orders")
-        if os.path.exists(orders_path):
-            odf = spark.read.schema(LIVE["orders"]).parquet(orders_path)
-            report = run_expectations(
-                [
-                    check_not_null(odf, "o_orderkey"),
-                    check_not_null(odf, "o_custkey"),
-                    check_unique(odf, "o_orderkey"),
-                ]
-            ).collect()
-            out["quality"] = {
-                r.check_name: (r.n_violations, r.passed) for r in report
-            }
     if compact:
         out["compact"] = compact_all(spark, processed)
-    if reduce:
-        out["reduce"] = query_reduce(
-            spark, processed, results, cutoff=now, k=k
-        )
+    gate = None
+    orders_path = os.path.join(processed, "orders")
+    if quality_gate and os.path.exists(orders_path):
+        # post-ingest expectations on the dynamic tables (DLT-style:
+        # a failed expectation is reported, the caller decides policy)
+        from .quality import check_key
+
+        gate = _Background(spark, lambda: check_key(
+            spark.read.schema(LIVE["orders"]).parquet(orders_path),
+            "o_orderkey", not_null=("o_custkey",),
+        ).collect())
+    try:
+        if reduce:
+            out["reduce"] = query_reduce(
+                spark, processed, results, cutoff=now, k=k
+            )
+    finally:
+        # no thread outlives the tick, and a failed reduce's error wins
+        # over the gate's, which result() raises once the reduce is done
+        if gate is not None:
+            gate.join()
+    if gate is not None:
+        out["quality"] = {
+            r.check_name: (r.n_violations, r.passed) for r in gate.result()
+        }
     return out
+
+
+class _Background(InheritableThread):
+    """Run ``fn()`` in a thread that inherits the caller's Spark job
+    group, job tags and local properties; :meth:`result` joins it and
+    returns ``fn``'s value or raises its error."""
+
+    def __init__(self, spark: SparkSession, fn) -> None:
+        self._value = self._error = None
+
+        def run() -> None:
+            try:
+                self._value = fn()
+            except BaseException as exc:  # re-raised by result()
+                self._error = exc
+
+        super().__init__(run, session=spark, daemon=True)
+        self.start()
+
+    def result(self) -> Any:
+        self.join()
+        if self._error is not None:
+            raise self._error
+        return self._value
 
 
 def serve_loop(

@@ -10,6 +10,7 @@ prove idempotence / append semantics.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import threading
 import uuid
@@ -28,7 +29,8 @@ from etl_tpch_spark.pipeline import (
     query_reduce,
     unshipped_orders_live,
 )
-from etl_tpch_spark.pipeline.reduce import SEGMENTS
+from etl_tpch_spark.pipeline import workflow
+from etl_tpch_spark.pipeline.reduce import SEGMENTS, _ranked
 from etl_tpch_spark.pipeline.workflow import results_ready, run_cycle
 
 from .conftest import TEST_SF_DIR
@@ -330,6 +332,161 @@ def test_reduce_one_pass_job_shape_and_release(spark, lake, tmp_path):
     # schema inference per table, a cache + count and one write per
     # segment took 15 jobs here
     assert n_one_pass == 6
+
+
+def _subtrees(plan: str, node: str) -> list[str]:
+    """The text of every subtree of a plan's final form whose root
+    line names ``node``: the root line and the deeper lines below it."""
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+    depth = lambda line: len(line) - len(line.lstrip(" :+-"))  # noqa: E731
+    out = []
+    for i, line in enumerate(lines):
+        if node in line:
+            j = i + 1
+            while j < len(lines) and depth(lines[j]) > depth(line):
+                j += 1
+            out.append("\n".join(lines[i:j]))
+    return out
+
+
+def test_reduce_ranking_pass_sort_merge_joins_the_facts(spark, lake):
+    """The ranking pass joins orders and lineitem by sort-merge on the
+    order key and broadcasts only the customer dimension, never the
+    lineitem table that grows every tick; the join's order-key
+    partitioning feeds the revenue aggregate with no exchange between
+    them (checked in the final adaptive plan)."""
+    ranked = _ranked(spark, lake, segments=SEGMENTS, cutoff=LAKE_CUTOFF,
+                     k=50)
+    assert ranked.collect()
+    plan = ranked._jdf.queryExecution().executedPlan().toString()
+    broadcasts = _subtrees(plan, "BroadcastExchange")
+    assert broadcasts and all("/processed/customer]" in b
+                              for b in broadcasts)
+    assert not any("/processed/lineitem]" in b for b in broadcasts)
+    (smj,) = _subtrees(plan, "SortMergeJoin")
+    assert re.search(r"SortMergeJoin \[o_orderkey#\d+\], \[l_orderkey#\d+\]",
+                     smj)
+    (agg,) = [t for t in _subtrees(plan, "HashAggregate")
+              if "partial_sum(revenue" in t.splitlines()[0]]
+    assert "SortMergeJoin" in agg
+    assert "Exchange" not in agg.split("SortMergeJoin")[0]
+
+
+# --- the quality gate beside the reduce ---------------------------------
+
+@pytest.fixture()
+def gated(spark, tmp_path):
+    """A lake after one ``run_cycle`` tick with the gate and the
+    reduce; the root directory."""
+    root = str(tmp_path / "lake")
+    run_cycle(spark, TEST_SF_DIR, root, now=NOW, quality_gate=True,
+              reduce=True, k=5)
+    return root
+
+
+def _gate_threads():
+    return [t for t in threading.enumerate()
+            if isinstance(t, workflow._Background)]
+
+
+def _corrupt_orders(root) -> str:
+    """Overwrite one orders part file with garbage; its name."""
+    orders = os.path.join(root, "processed", "orders")
+    part = sorted(_parts(orders))[0]
+    with open(os.path.join(orders, part), "wb") as f:
+        f.write(b"not a parquet file")
+    return part
+
+
+def _last_job_id(spark) -> int:
+    """The id of a new one-task probe job: Spark numbers every job of
+    the context in order, the stream drains' too, whatever their job
+    group."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    (job,) = sc.statusTracker().getJobIdsForGroup(group)
+    return job
+
+
+def test_run_cycle_warm_tick_job_count(spark, gated):
+    """A warm tick (two staged tables drained, the one-pass gate beside
+    the reduce) runs 11 Spark jobs in all."""
+    for i in (1, 2):  # the first warm tick warms every stage
+        tick = NOW + timedelta(minutes=15 * i)
+        incrementalize(spark, TEST_SF_DIR,
+                       os.path.join(gated, "staging"), now=tick)
+        before = _last_job_id(spark)
+        out = run_cycle(spark, TEST_SF_DIR, gated, now=tick,
+                        generate=False, quality_gate=True, reduce=True,
+                        k=5)
+        n = _last_job_id(spark) - before - 1
+    assert all(passed for _, passed in out["quality"].values())
+    # 2 drains + the gate's 3 + the reduce's 6; 13 with the five-job
+    # gate (two null counts and a uniqueness check in a union) that
+    # ran before the reduce
+    assert n == 11
+
+
+def test_gate_jobs_run_in_the_callers_job_group(spark, gated):
+    """The gate's thread inherits the caller's job group: a tick with
+    the gate alone (no ingest, no reduce, as on most serve_loop ticks)
+    runs the gate's 3 jobs, all in that group."""
+    out = {}
+
+    def gate_only():
+        out.update(run_cycle(spark, TEST_SF_DIR, gated, now=NOW,
+                             generate=False, ingest=False,
+                             quality_gate=True))
+
+    assert _jobs_in_group(spark, gate_only) == 3
+    assert set(out["quality"]) == {
+        "not_null:o_orderkey", "not_null:o_custkey", "unique:o_orderkey"}
+    assert not _gate_threads()
+
+
+def test_gate_error_is_raised_after_the_reduce(spark, gated, monkeypatch):
+    """A gate that fails (a corrupt orders part file) does not stop
+    the reduce: its error is raised only once the reduce has
+    returned, and no gate thread is left alive."""
+    part = _corrupt_orders(gated)
+    events = []
+
+    def reduce_after_gate(*args, **kwargs):
+        # finish only after the gate has failed
+        for t in _gate_threads():
+            t.join(timeout=60)
+        events.append("reduced")
+        return {}
+
+    monkeypatch.setattr(workflow, "query_reduce", reduce_after_gate)
+    with pytest.raises(Exception) as exc:
+        run_cycle(spark, TEST_SF_DIR, gated, now=NOW, generate=False,
+                  ingest=False, quality_gate=True, reduce=True)
+    assert events == ["reduced"]
+    assert part in str(exc.value)  # the gate's read error
+    assert not _gate_threads()
+
+
+def test_reduce_error_wins_over_the_gate(spark, gated, monkeypatch):
+    """When the reduce and the gate both fail, the reduce's error is
+    raised, and the gate thread has been joined."""
+    _corrupt_orders(gated)
+
+    def failing_reduce(*args, **kwargs):
+        for t in _gate_threads():
+            t.join(timeout=60)
+        raise RuntimeError("the reduce failed")
+
+    monkeypatch.setattr(workflow, "query_reduce", failing_reduce)
+    with pytest.raises(RuntimeError, match="the reduce failed"):
+        run_cycle(spark, TEST_SF_DIR, gated, now=NOW, generate=False,
+                  ingest=False, quality_gate=True, reduce=True)
+    assert not _gate_threads()
 
 
 def _gold_rows(spark, results):

@@ -8,6 +8,7 @@ import pytest
 from etl_tpch_spark.pipeline.quality import (
     assert_expectations,
     check_foreign_key,
+    check_key,
     check_not_null,
     check_unique,
     run_expectations,
@@ -48,3 +49,33 @@ def test_assert_gate_passes_and_fails(spark, dirty):
     assert_expectations([check_not_null(child, "k")])  # clean column
     with pytest.raises(AssertionError, match="unique:k"):
         assert_expectations([check_unique(child, "k")])
+
+
+@pytest.mark.parametrize("rows", ["dirty", "empty"])
+def test_check_key_equals_the_three_checks(spark, rows):
+    """The one-pass key gate reports what the three separate checks
+    report — names, order, counts and ``passed`` — on a frame with two
+    null keys (so also a duplicated null key), a duplicated key and
+    null ``o_custkey`` values, and on an empty frame."""
+    df = spark.createDataFrame(
+        [("a", 1), ("a", None), ("b", 2), (None, 3), (None, None),
+         ("c", None), ("d", 4)],
+        "o_orderkey string, o_custkey long",
+    )
+    if rows == "empty":
+        df = df.limit(0)
+    got = check_key(df, "o_orderkey", not_null=("o_custkey",)).collect()
+    want = run_expectations([
+        check_not_null(df, "o_orderkey"),
+        check_not_null(df, "o_custkey"),
+        check_unique(df, "o_orderkey"),
+    ]).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    counts = {r.check_name: r.n_violations for r in got}
+    assert counts == (
+        {"not_null:o_orderkey": 2, "not_null:o_custkey": 3,
+         "unique:o_orderkey": 2}
+        if rows == "dirty" else
+        {"not_null:o_orderkey": 0, "not_null:o_custkey": 0,
+         "unique:o_orderkey": 0}
+    )
