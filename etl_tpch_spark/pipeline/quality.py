@@ -57,34 +57,27 @@ def check_unique(df: DataFrame, col: str) -> DataFrame:
     ).select("r.*")
 
 
-def check_key(
-    df: DataFrame, key: str, not_null: tuple[str, ...] = ()
-) -> DataFrame:
-    """``not_null:<key>``, ``not_null:<c>`` for each column ``c`` of
-    ``not_null`` and ``unique:<key>`` in one pass: one scan, a groupBy
-    on ``key`` that counts the rows and the non-null ``c`` of each key,
-    then one global aggregate over those groups.  The counts equal
+def check_key(df: DataFrame, key: str, not_null: str) -> DataFrame:
+    """``not_null:<key>``, ``not_null:<not_null>`` and ``unique:<key>``
+    in one pass: one scan, a groupBy on ``key`` that counts the rows
+    and the non-null ``not_null`` values of each key, then one global
+    aggregate over those groups.  The counts equal
     :func:`check_not_null` and :func:`check_unique` row for row: the
     null keys form one group, so several of them are also one
     duplicated key, as in :func:`check_unique`'s groupBy."""
-    per_key = df.groupBy(key).agg(
-        F.count(F.lit(1)).alias("__n"),
-        *(F.count(c).alias(f"__nn{i}") for i, c in enumerate(not_null)),
-    )
     n = F.col("__n")
     total = lambda v: F.coalesce(F.sum(v), F.lit(0))  # noqa: E731
-    reports = [
-        _report(f"not_null:{key}", total(F.when(F.col(key).isNull(), n))),
-        *(
-            _report(f"not_null:{c}", total(n - F.col(f"__nn{i}")))
-            for i, c in enumerate(not_null)
-        ),
-        _report(f"unique:{key}", F.count(F.when(n > 1, 1))),
-    ]
     return (
-        per_key.agg(*(r.alias(f"r{i}") for i, r in enumerate(reports)))
-        .select(F.explode(F.array(*(f"r{i}" for i in range(len(reports)))))
-                .alias("r"))
+        df.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("__n"), F.count(not_null).alias("__nn"))
+        .agg(
+            _report(f"not_null:{key}", total(F.when(F.col(key).isNull(), n)))
+            .alias("r0"),
+            _report(f"not_null:{not_null}", total(n - F.col("__nn")))
+            .alias("r1"),
+            _report(f"unique:{key}", F.count(F.when(n > 1, 1))).alias("r2"),
+        )
+        .select(F.explode(F.array("r0", "r1", "r2")).alias("r"))
         .select("r.*")
     )
 

@@ -18,11 +18,13 @@ zone atomically: ``results`` is a symlink to the current
 ``.results-<uuid>`` generation (POSIX filesystems), which
 :func:`results_ready` and the dashboards resolve once per read.
 
-The quality gate is one pass over ``orders`` (``quality.check_key``)
-and runs beside the reduce: a failed expectation is reported, never
-blocks the publish, so nothing waits on the gate until the tick
-ends.  Compaction runs first, so the gate never reads a table whose
-directory is being swapped.
+The quality gate is one pass over ``orders`` (``quality.check_key``).
+On a tick with a reduce it runs in a thread beside the reduce: a
+failed expectation is reported, never blocks the publish, so nothing
+waits on the gate until the tick ends.  On a tick without one (most
+:func:`serve_loop` ticks) it runs alone, inline.  Compaction runs
+first, so the gate never reads a table whose directory is being
+swapped.
 """
 
 from __future__ import annotations
@@ -86,17 +88,24 @@ def run_cycle(
             )
     if compact:
         out["compact"] = compact_all(spark, processed)
-    gate = None
+    gate = rows = None
     orders_path = os.path.join(processed, "orders")
     if quality_gate and os.path.exists(orders_path):
         # post-ingest expectations on the dynamic tables (DLT-style:
         # a failed expectation is reported, the caller decides policy)
         from .quality import check_key
 
-        gate = _Background(spark, lambda: check_key(
-            spark.read.schema(LIVE["orders"]).parquet(orders_path),
-            "o_orderkey", not_null=("o_custkey",),
-        ).collect())
+        def report() -> list:
+            return check_key(
+                spark.read.schema(LIVE["orders"]).parquet(orders_path),
+                "o_orderkey", "o_custkey",
+            ).collect()
+
+        # beside the reduce when the tick has one, else alone, inline
+        if reduce:
+            gate = _Background(spark, report)
+        else:
+            rows = report()
     try:
         if reduce:
             out["reduce"] = query_reduce(
@@ -108,8 +117,10 @@ def run_cycle(
         if gate is not None:
             gate.join()
     if gate is not None:
+        rows = gate.result()
+    if rows is not None:
         out["quality"] = {
-            r.check_name: (r.n_violations, r.passed) for r in gate.result()
+            r.check_name: (r.n_violations, r.passed) for r in rows
         }
     return out
 

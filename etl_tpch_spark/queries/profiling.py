@@ -103,7 +103,7 @@ def quality_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     return run_expectations(
         [
-            check_key(t.orders, "o_orderkey", not_null=("o_custkey",))
+            check_key(t.orders, "o_orderkey", "o_custkey")
             .filter(F.col("check_name") != "not_null:o_orderkey"),
             check_in_range(t.lineitem, "l_quantity", 1.0, 30.0),
             check_accepted_values(t.lineitem, "l_returnflag", ["A", "N", "R"]),

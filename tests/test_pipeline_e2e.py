@@ -432,20 +432,26 @@ def test_run_cycle_warm_tick_job_count(spark, gated):
     assert n == 11
 
 
-def test_gate_jobs_run_in_the_callers_job_group(spark, gated):
-    """The gate's thread inherits the caller's job group: a tick with
-    the gate alone (no ingest, no reduce, as on most serve_loop ticks)
-    runs the gate's 3 jobs, all in that group."""
-    out = {}
+def test_gate_jobs_run_in_the_callers_job_group(spark, gated, monkeypatch):
+    """The gate runs its 3 jobs in the caller's job group: inline on a
+    tick without a reduce (as on most serve_loop ticks), and from a
+    thread that inherits the group beside a reduce (stubbed here to
+    run no job)."""
+    def tick(**kwargs):
+        out = run_cycle(spark, TEST_SF_DIR, gated, now=NOW, generate=False,
+                        ingest=False, quality_gate=True, **kwargs)
+        assert set(out["quality"]) == {
+            "not_null:o_orderkey", "not_null:o_custkey",
+            "unique:o_orderkey"}
 
-    def gate_only():
-        out.update(run_cycle(spark, TEST_SF_DIR, gated, now=NOW,
-                             generate=False, ingest=False,
-                             quality_gate=True))
+    def no_thread(*args, **kwargs):
+        raise AssertionError("a gate alone needs no thread")
 
-    assert _jobs_in_group(spark, gate_only) == 3
-    assert set(out["quality"]) == {
-        "not_null:o_orderkey", "not_null:o_custkey", "unique:o_orderkey"}
+    with monkeypatch.context() as m:
+        m.setattr(workflow, "_Background", no_thread)
+        assert _jobs_in_group(spark, tick) == 3
+    monkeypatch.setattr(workflow, "query_reduce", lambda *a, **k: {})
+    assert _jobs_in_group(spark, lambda: tick(reduce=True)) == 3
     assert not _gate_threads()
 
 

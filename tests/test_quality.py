@@ -64,7 +64,7 @@ def test_check_key_equals_the_three_checks(spark, rows):
     )
     if rows == "empty":
         df = df.limit(0)
-    got = check_key(df, "o_orderkey", not_null=("o_custkey",)).collect()
+    got = check_key(df, "o_orderkey", "o_custkey").collect()
     want = run_expectations([
         check_not_null(df, "o_orderkey"),
         check_not_null(df, "o_custkey"),

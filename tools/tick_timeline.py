@@ -1,11 +1,10 @@
 """Warm-tick job timeline and the reduce's final plan, from an event log.
 
     python3 tools/tick_timeline.py --out DIR [--sf-dir /root/testdata/sf0.01]
-        [--ticks 4]
 
-Grows a lake in a temporary directory (deleted afterwards) the way
-perfbench's ``lake_ticks`` workload does: each tick stages one batch
-with ``incrementalize`` (untimed), then runs
+Grows a lake of ``TICKS`` ticks in a temporary directory (deleted
+afterwards) the way perfbench's ``lake_ticks`` workload does: each
+tick stages one batch with ``incrementalize`` (untimed), then runs
 ``run_cycle(generate=False, quality_gate=True, reduce=True)`` on a
 15-minute synthetic clock.  The session writes an uncompressed Spark
 event log, from which the script writes to DIR:
@@ -47,6 +46,7 @@ from etl_tpch_spark.pipeline.workflow import run_cycle  # noqa: E402
 from etl_tpch_spark.session import get_spark  # noqa: E402
 
 BASE = datetime(2024, 1, 1)
+TICKS = 4
 
 
 def _call_site(name: str) -> str:
@@ -100,7 +100,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", required=True)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--ticks", type=int, default=4)
     args = ap.parse_args()
 
     work = tempfile.mkdtemp(prefix="tick_timeline-")
@@ -114,7 +113,7 @@ def main() -> None:
             "spark.eventLog.rolling.enabled": "false",
         })
         root = os.path.join(work, "lake")
-        for tick in range(args.ticks):
+        for tick in range(TICKS):
             now = BASE + timedelta(minutes=15 * tick)
             incrementalize(spark, args.sf_dir, os.path.join(root, "staging"),
                            now=now, seed=tick)
@@ -125,7 +124,7 @@ def main() -> None:
         spark.stop()  # flushes the event log
         (log,) = glob.glob(os.path.join(events, "*"))
         timeline, plan = read_tick(log, t0, t1)
-        timeline["ticks"] = args.ticks
+        timeline["ticks"] = TICKS
         os.makedirs(args.out, exist_ok=True)
         with open(os.path.join(args.out, "timeline.json"), "w") as fh:
             json.dump(timeline, fh, indent=1)
